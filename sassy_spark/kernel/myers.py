@@ -1,13 +1,21 @@
-"""Bit-parallel approximate string matching kernel (numpy, batch-vectorized).
+"""Bit-parallel approximate string matching kernel.
 
-This is the computational heart of the engine: a from-scratch numpy
+This is the computational heart of the engine: a from-scratch
 implementation of Myers' 1999 bit-parallel edit-distance recurrence
-(with Hyyro's block extension for patterns longer than 64 chars), laid
-out so the *batch of pairs* is the vectorized dimension. One Python-level
-loop step advances ALL pairs in the batch by one text character — the
-numpy analog of the reference engine's SIMD lanes (sassy processes 4-8
-64-char blocks per AVX vector, src/bitpacking.rs:63-85; we process
-B pairs x W words per numpy op).
+(with Hyyro's block extension for patterns longer than 64 chars).
+
+Banded global scoring (``edit_distances(k=...)``, the entity-resolution
+pair scorer) runs a compiled per-pair loop over the recurrence
+(``cbanded.c``, built with cffi at first import), as sassy runs its own
+as a tight native loop. Everything else runs in numpy, laid out so the
+*batch of pairs* is the vectorized dimension: one Python-level loop step
+advances ALL pairs in the batch by one text character — the numpy analog
+of the reference engine's SIMD lanes (sassy processes 4-8 64-char blocks
+per AVX vector, src/bitpacking.rs:63-85; we process B pairs x W words per
+numpy op). The numpy banded kernel stays as the fallback when the
+compiled one cannot be built (``C_KERNEL_ERROR`` then says why), for
+IUPAC ``classes=`` profiles, and as the oracle the compiled loop is
+tested against.
 
 Unit of distance: **Unicode codepoints** for ``str`` inputs (matching
 SQL ``levenshtein`` and Python ``str`` slicing — start/end offsets
@@ -60,6 +68,11 @@ published algorithm (G. Myers, JACM 46(3), 1999; H. Hyyro, 2003).
 from __future__ import annotations
 
 import numpy as np
+
+from . import cbanded as _cbanded
+
+# None when the compiled banded kernel is in use, else why it is not
+C_KERNEL_ERROR = _cbanded.ERROR
 
 U1 = np.uint64(1)
 U63 = np.uint64(63)
@@ -761,7 +774,76 @@ def banded_edit_distances(
     word window over Myers' recurrence).
 
     Per pair: exact distance if <= k_i, else k_i + 1. ``k`` scalar or
-    per-pair array. Work per column is O(band_words) instead of
+    per-pair array. Runs the compiled kernel when it is loaded and no
+    ``classes`` profile is given, else :func:`_banded_edit_distances_numpy`.
+    """
+    if classes is None and _cbanded.LIB is not None:
+        return _banded_edit_distances_c(a_list, b_list, k)
+    return _banded_edit_distances_numpy(a_list, b_list, k, classes)
+
+
+def _symbol_buffer(seqs: list) -> tuple[np.ndarray, np.ndarray]:
+    """Concatenated symbols and int64 offsets of a batch, in the units of
+    :func:`_as_symbols`. uint8 when every symbol fits a byte (bytes,
+    ASCII str, uint8 views), else uint32 codepoints."""
+    parts = [
+        s if isinstance(s, np.ndarray) and s.dtype == np.uint8
+        else np.frombuffer(s, dtype=np.uint8) if isinstance(s, (bytes, bytearray))
+        else np.frombuffer(s.encode(), dtype=np.uint8)
+        if isinstance(s, str) and s.isascii()
+        else _as_symbols(s)
+        for s in seqs
+    ]
+    offs = np.zeros(len(parts) + 1, dtype=np.int64)
+    np.cumsum([len(p) for p in parts], out=offs[1:])
+    return np.concatenate(parts), offs
+
+
+def _banded_edit_distances_c(a_list: list, b_list: list, k) -> np.ndarray:
+    """The compiled kernel on a batch. Symbols wider than a byte are
+    mapped onto the batch's distinct symbols; when there are more than
+    256, onto each pair's own, and the rare pair with more than 256
+    distinct symbols runs the numpy kernel."""
+    bsz = len(a_list)
+    if bsz == 0:
+        return np.zeros(0, dtype=np.int64)
+    k_arr = np.broadcast_to(np.asarray(k, dtype=np.int64), (bsz,)).copy()
+    a_data, a_offs = _symbol_buffer(a_list)
+    b_data, b_offs = _symbol_buffer(b_list)
+    if a_data.dtype == np.uint8 and b_data.dtype == np.uint8:
+        return _cbanded.distances(a_data, a_offs, b_data, b_offs, k_arr)
+    vals, inv = np.unique(np.concatenate([a_data, b_data]), return_inverse=True)
+    if len(vals) <= 256:
+        inv = inv.astype(np.uint8)
+        na = len(a_data)
+        return _cbanded.distances(inv[:na], a_offs, inv[na:], b_offs, k_arr)
+    out = np.empty(bsz, dtype=np.int64)
+    wide = []
+    for i in range(bsz):
+        sa = a_data[a_offs[i] : a_offs[i + 1]]
+        sb = b_data[b_offs[i] : b_offs[i + 1]]
+        vals, inv = np.unique(np.concatenate([sa, sb]), return_inverse=True)
+        if len(vals) > 256:
+            wide.append(i)
+            continue
+        inv = inv.astype(np.uint8)
+        out[i] = _cbanded.distances(
+            inv[: len(sa)], [0, len(sa)], inv[len(sa) :], [0, len(sb)],
+            k_arr[i : i + 1],
+        )[0]
+    if wide:
+        out[wide] = _banded_edit_distances_numpy(
+            [a_list[i] for i in wide], [b_list[i] for i in wide], k_arr[wide]
+        )
+    return out
+
+
+def _banded_edit_distances_numpy(
+    a_list: list, b_list: list, k, classes: dict | None = None
+) -> np.ndarray:
+    """numpy form of :func:`banded_edit_distances`, vectorized over the
+    batch: the fallback, the ``classes`` path, and the compiled kernel's
+    oracle. Work per column is O(band_words) instead of
     O(pattern_words); finished and provably-hopeless pairs are compacted
     out of the batch as the scan advances (the batch analog of sassy's
     per-lane early termination, reference src/search.rs:952-975).

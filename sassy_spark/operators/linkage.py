@@ -11,7 +11,8 @@ reference src/pattern_tiling/general.rs:60-102) — onto Spark:
                           accounting, the analog of sassy's batch-size
                           bounds (bin/input_iterator.rs:7-9).
   stage 2 (scoring)     = candidate *verification*: banded Myers global
-                          edit distance in an Arrow-batched numpy UDF,
+                          edit distance in an Arrow-batched UDF (a
+                          compiled per-pair loop; numpy as fallback),
                           with the cheap length-difference prefilter
                           |len_a - len_b| <= k pushed BEFORE the text
                           join/UDF (the relational analog of sassy's
@@ -560,56 +561,91 @@ def score_pairs(
         "url_a string, url_b string, len_a int, len_b int, k_eff int, "
         "cost int, normalized_cost double, is_match boolean"
     )
-
-    # ~1024 pairs/kernel call: the Peq gather tables of a larger batch
-    # fall out of cache and the kernel goes memory-bound (measured 2x
-    # slowdown at 4096) — the numpy analog of sassy's 1 MiB task-batch
-    # bound (bin/input_iterator.rs:7-9). Tunable for concurrency-level
-    # cache-pressure experiments.
+    # ~512 pairs per numpy kernel call: the Peq gather tables of a larger
+    # batch fall out of cache and the numpy kernel goes memory-bound
+    # (measured 2x slowdown at 4096) — the numpy analog of sassy's 1 MiB
+    # task-batch bound (bin/input_iterator.rs:7-9). The compiled global
+    # kernel runs pair by pair on one Arrow batch and needs no chunks.
+    # Tunable for concurrency-level cache-pressure experiments.
+    import functools
     import os
 
     chunk_rows = int(os.environ.get("SASSY_CHUNK_ROWS", "512"))
+    return df.mapInArrow(
+        functools.partial(
+            _score_batches, score_mode=score_mode, alpha=alpha,
+            max_overhang=max_overhang, chunk_rows=chunk_rows,
+        ),
+        schema=out_schema,
+    )
 
-    def run_arrow(batches):
-        # Arrow-native scoring: texts reach the kernel as numpy uint8
-        # VIEWS over the Arrow string buffers — no PyUnicode
-        # materialization, no pandas object columns, no per-chunk
-        # tolist(). That object churn (2 PyUnicode + 1 bytes temp per
-        # pair, each ~2-4 KB) was measured to triple the per-worker cost
-        # at 32 concurrent workers (allocator/bandwidth contention) while
-        # being invisible at 8 — i.e., it was the scaling bottleneck, not
-        # the kernel. Pure-ASCII batches take the view path (byte ==
-        # codepoint); a batch containing any non-ASCII byte falls back to
-        # Python str per string, preserving codepoint cost semantics.
-        import pyarrow as pa
 
-        def string_views(arr: "pa.Array"):
-            if arr.null_count:
-                return arr.to_pylist()
-            bufs = arr.buffers()
-            odt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
-            offs = np.frombuffer(bufs[1], dtype=odt)[
-                arr.offset : arr.offset + len(arr) + 1
-            ]
-            data = np.frombuffer(bufs[2], dtype=np.uint8)
-            lo, hi = int(offs[0]), int(offs[-1])
-            if hi > lo and (data[lo:hi] & 0x80).any():
-                return [s.as_py() for s in arr]
-            return [data[offs[i] : offs[i + 1]] for i in range(len(arr))]
+def _ascii_buffer(arr):
+    """(uint8 data, int64 offsets) views of an Arrow string array's own
+    buffers, or None when it holds nulls or any non-ASCII byte (then a
+    byte is not a codepoint, the unit SQL ``levenshtein`` counts)."""
+    import pyarrow as pa
 
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            len_a = batch.column("len_a").to_numpy()
-            len_b = batch.column("len_b").to_numpy()
-            k_eff_arr = batch.column("k_eff").to_numpy().astype(np.int64)
-            texts_a = string_views(batch.column("text_a"))
-            texts_b = string_views(batch.column("text_b"))
-            # sort by text length: kernel chunks become length-homogeneous
-            # -> less padding waste (the reference's length-sorting advice,
-            # src/search.rs:326-334); costs scatter back to input order so
-            # the url columns pass through untouched (zero copy)
+    if arr.null_count:
+        return None
+    bufs = arr.buffers()
+    odt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    offs = np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
+    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] else np.zeros(0, np.uint8)
+    lo, hi = int(offs[0]), int(offs[-1])
+    if hi > lo and (data[lo:hi] & 0x80).any():
+        return None
+    return data, offs
+
+
+def _score_batches(batches, score_mode, alpha, max_overhang, chunk_rows):
+    """score_pairs' mapInArrow body: cost, normalized_cost and is_match
+    for each Arrow batch of pairs with their texts attached."""
+    # Arrow-native scoring: ASCII texts reach the kernel as numpy uint8
+    # VIEWS over the Arrow string buffers — no PyUnicode
+    # materialization, no pandas object columns, no per-pair copies.
+    # That object churn (2 PyUnicode + 1 bytes temp per pair, each ~2-4
+    # KB) was measured to triple the per-worker cost at 32 concurrent
+    # workers (allocator/bandwidth contention) while being invisible at
+    # 8. A batch containing any non-ASCII byte takes Python str per
+    # string, preserving codepoint cost semantics.
+    import pyarrow as pa
+
+    from ..kernel import cbanded
+
+    def string_views(arr: "pa.Array"):
+        buf = _ascii_buffer(arr)
+        if buf is None:
+            return arr.to_pylist()
+        data, offs = buf
+        return [data[offs[i] : offs[i + 1]] for i in range(len(arr))]
+
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        len_a = batch.column("len_a").to_numpy()
+        len_b = batch.column("len_b").to_numpy()
+        k_eff_arr = batch.column("k_eff").to_numpy().astype(np.int64)
+        col_a, col_b = batch.column("text_a"), batch.column("text_b")
+        if score_mode != "containment" and cbanded.LIB is not None:
+            # compiled kernel: one call per Arrow batch, straight on the
+            # Arrow buffers when both sides are ASCII
+            buf_a, buf_b = _ascii_buffer(col_a), _ascii_buffer(col_b)
+            if buf_a is not None and buf_b is not None:
+                cost = cbanded.distances(*buf_a, *buf_b, k_eff_arr)
+            else:
+                cost = myers.edit_distances(
+                    col_a.to_pylist(), col_b.to_pylist(), k=k_eff_arr
+                )
+        else:
+            texts_a = string_views(col_a)
+            texts_b = string_views(col_b)
+            # sort by text length: numpy kernel chunks become
+            # length-homogeneous -> less padding waste (the reference's
+            # length-sorting advice, src/search.rs:326-334); costs scatter
+            # back to input order so the url columns pass through
+            # untouched (zero copy)
             order = np.argsort(len_b, kind="stable")
             cost = np.empty(n, dtype=np.int64)
             for lo in range(0, n, chunk_rows):
@@ -638,29 +674,27 @@ def score_pairs(
                         [texts_b[i] for i in sel],
                         k=k_sel,
                     )
-            denom = (
-                np.minimum(len_a, len_b)
-                if score_mode == "containment"
-                else np.maximum(len_a, len_b)
-            ).clip(min=1)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("url_a"),
-                    batch.column("url_b"),
-                    pa.array(len_a.astype(np.int32)),
-                    pa.array(len_b.astype(np.int32)),
-                    pa.array(k_eff_arr.astype(np.int32)),
-                    pa.array(cost.astype(np.int32)),
-                    pa.array(cost / denom),
-                    pa.array(cost <= k_eff_arr),
-                ],
-                names=[
-                    "url_a", "url_b", "len_a", "len_b", "k_eff",
-                    "cost", "normalized_cost", "is_match",
-                ],
-            )
-
-    return df.mapInArrow(run_arrow, schema=out_schema)
+        denom = (
+            np.minimum(len_a, len_b)
+            if score_mode == "containment"
+            else np.maximum(len_a, len_b)
+        ).clip(min=1)
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("url_a"),
+                batch.column("url_b"),
+                pa.array(len_a.astype(np.int32)),
+                pa.array(len_b.astype(np.int32)),
+                pa.array(k_eff_arr.astype(np.int32)),
+                pa.array(cost.astype(np.int32)),
+                pa.array(cost / denom),
+                pa.array(cost <= k_eff_arr),
+            ],
+            names=[
+                "url_a", "url_b", "len_a", "len_b", "k_eff",
+                "cost", "normalized_cost", "is_match",
+            ],
+        )
 
 
 # --------------------------------------------------------------- pipeline

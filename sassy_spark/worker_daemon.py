@@ -11,9 +11,11 @@ Enable with spark.python.daemon.module=sassy_spark.worker_daemon.
 import numpy  # noqa: F401
 import pandas  # noqa: F401
 
-try:  # engine kernel: also warms numpy ufunc machinery
-    from sassy_spark.kernel import myers  # noqa: F401
-except Exception:  # pragma: no cover - engine not on worker path
+try:  # engine kernel: also warms numpy ufunc machinery. cbanded loads
+    # (and on a cold cache builds) the compiled scoring kernel here, once,
+    # so forked workers inherit the mapped library
+    from sassy_spark.kernel import cbanded, myers  # noqa: F401
+except ImportError:  # pragma: no cover - engine not on worker path
     pass
 
 import pyarrow  # noqa: F401
