@@ -565,8 +565,8 @@ def score_pairs(
     # batch fall out of cache and the numpy kernel goes memory-bound
     # (measured 2x slowdown at 4096) — the numpy analog of sassy's 1 MiB
     # task-batch bound (bin/input_iterator.rs:7-9). The compiled global
-    # kernel runs pair by pair on one Arrow batch and needs no chunks.
-    # Tunable for concurrency-level cache-pressure experiments.
+    # kernel runs pair by pair on a whole ASCII Arrow batch and takes no
+    # chunks. Tunable for concurrency-level cache-pressure experiments.
     import functools
     import os
 
@@ -580,45 +580,31 @@ def score_pairs(
     )
 
 
-def _ascii_buffer(arr):
-    """(uint8 data, int64 offsets) views of an Arrow string array's own
-    buffers, or None when it holds nulls or any non-ASCII byte (then a
-    byte is not a codepoint, the unit SQL ``levenshtein`` counts)."""
+def _utf8_buffer(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(uint8 data, offsets) views of an Arrow string array's own
+    buffers; a null reads as the empty string."""
     import pyarrow as pa
 
     if arr.null_count:
-        return None
+        arr = arr.fill_null("")
     bufs = arr.buffers()
     odt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
     offs = np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
     data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] else np.zeros(0, np.uint8)
-    lo, hi = int(offs[0]), int(offs[-1])
-    if hi > lo and (data[lo:hi] & 0x80).any():
-        return None
     return data, offs
 
 
 def _score_batches(batches, score_mode, alpha, max_overhang, chunk_rows):
     """score_pairs' mapInArrow body: cost, normalized_cost and is_match
     for each Arrow batch of pairs with their texts attached."""
-    # Arrow-native scoring: ASCII texts reach the kernel as numpy uint8
-    # VIEWS over the Arrow string buffers — no PyUnicode
-    # materialization, no pandas object columns, no per-pair copies.
-    # That object churn (2 PyUnicode + 1 bytes temp per pair, each ~2-4
-    # KB) was measured to triple the per-worker cost at 32 concurrent
-    # workers (allocator/bandwidth contention) while being invisible at
-    # 8. A batch containing any non-ASCII byte takes Python str per
-    # string, preserving codepoint cost semantics.
+    # Arrow-native scoring: texts reach the kernel as the Arrow string
+    # buffers themselves, or for ASCII rows as numpy uint8 views over
+    # them — no pandas object columns, no per-pair copies. That object
+    # churn (2 PyUnicode + 1 bytes temp per pair, each ~2-4 KB) was
+    # measured to triple the per-worker cost at 32 concurrent workers
+    # (allocator/bandwidth contention) while being invisible at 8.
+    # Non-ASCII rows are decoded to str, keeping codepoint cost units.
     import pyarrow as pa
-
-    from ..kernel import cbanded
-
-    def string_views(arr: "pa.Array"):
-        buf = _ascii_buffer(arr)
-        if buf is None:
-            return arr.to_pylist()
-        data, offs = buf
-        return [data[offs[i] : offs[i + 1]] for i in range(len(arr))]
 
     for batch in batches:
         n = batch.num_rows
@@ -627,53 +613,40 @@ def _score_batches(batches, score_mode, alpha, max_overhang, chunk_rows):
         len_a = batch.column("len_a").to_numpy()
         len_b = batch.column("len_b").to_numpy()
         k_eff_arr = batch.column("k_eff").to_numpy().astype(np.int64)
-        col_a, col_b = batch.column("text_a"), batch.column("text_b")
-        if score_mode != "containment" and cbanded.LIB is not None:
-            # compiled kernel: one call per Arrow batch, straight on the
-            # Arrow buffers when both sides are ASCII
-            buf_a, buf_b = _ascii_buffer(col_a), _ascii_buffer(col_b)
-            if buf_a is not None and buf_b is not None:
-                cost = cbanded.distances(*buf_a, *buf_b, k_eff_arr)
-            else:
-                cost = myers.edit_distances(
-                    col_a.to_pylist(), col_b.to_pylist(), k=k_eff_arr
-                )
+        buf_a = _utf8_buffer(batch.column("text_a"))
+        buf_b = _utf8_buffer(batch.column("text_b"))
+        if score_mode != "containment":
+            cost = myers.banded_edit_distances_utf8(
+                *buf_a, *buf_b, k_eff_arr, chunk_rows=chunk_rows
+            )
         else:
-            texts_a = string_views(col_a)
-            texts_b = string_views(col_b)
-            # sort by text length: numpy kernel chunks become
-            # length-homogeneous -> less padding waste (the reference's
-            # length-sorting advice, src/search.rs:326-334); costs scatter
-            # back to input order so the url columns pass through
-            # untouched (zero copy)
+            texts_a = myers.utf8_rows(*buf_a)
+            texts_b = myers.utf8_rows(*buf_b)
+            # sort by text length: kernel chunks become length-homogeneous
+            # -> less padding waste (the reference's length-sorting
+            # advice, src/search.rs:326-334); costs scatter back to input
+            # order so the url columns pass through untouched (zero copy)
             order = np.argsort(len_b, kind="stable")
             cost = np.empty(n, dtype=np.int64)
             for lo in range(0, n, chunk_rows):
                 sel = order[lo : lo + chunk_rows]
                 k_sel = k_eff_arr[sel]
-                if score_mode == "containment":
-                    shorter = [
-                        texts_a[i] if len_a[i] <= len_b[i] else texts_b[i]
-                        for i in sel
-                    ]
-                    longer = [
-                        texts_b[i] if len_a[i] <= len_b[i] else texts_a[i]
-                        for i in sel
-                    ]
-                    res = myers.semiglobal_search(
-                        shorter, longer, int(k_sel.max()),
-                        mode="best", alpha=alpha, max_overhang=max_overhang,
-                    )
-                    cost[sel] = [
-                        int(c[0]) if len(c) else int(kk) + 1
-                        for (_, c), kk in zip(res, k_sel)
-                    ]
-                else:
-                    cost[sel] = myers.edit_distances(
-                        [texts_a[i] for i in sel],
-                        [texts_b[i] for i in sel],
-                        k=k_sel,
-                    )
+                shorter = [
+                    texts_a[i] if len_a[i] <= len_b[i] else texts_b[i]
+                    for i in sel
+                ]
+                longer = [
+                    texts_b[i] if len_a[i] <= len_b[i] else texts_a[i]
+                    for i in sel
+                ]
+                res = myers.semiglobal_search(
+                    shorter, longer, int(k_sel.max()),
+                    mode="best", alpha=alpha, max_overhang=max_overhang,
+                )
+                cost[sel] = [
+                    int(c[0]) if len(c) else int(kk) + 1
+                    for (_, c), kk in zip(res, k_sel)
+                ]
         denom = (
             np.minimum(len_a, len_b)
             if score_mode == "containment"

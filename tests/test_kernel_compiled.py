@@ -34,8 +34,8 @@ def test_compiled_codepoint_units():
     a = "naïve café — 東京 😀 résumé, ß and Ω"
     b = "naive cafe - 東京都 😀 resume, ss and Ω"
     assert banded_edit_distances([a], [b], 40).tolist() == [levenshtein(a, b)]
-    # 2 pairs of 200 distinct CJK codepoints each (400 in the batch), and
-    # one pair of 300 distinct codepoints (numpy runs that one)
+    # 2 pairs of 200 distinct CJK codepoints each (mapped onto a byte per
+    # pair), and one pair of 300 distinct codepoints (numpy runs that one)
     cjk = [chr(0x4E00 + i) for i in range(700)]
     x1, x2, x3 = "".join(cjk[:200]), "".join(cjk[200:400]), "".join(cjk[400:700])
     ys = [x1[:50] + x1[60:], x2[::-1][:150], x3[:100] + "a" + x3[100:]]
@@ -123,6 +123,57 @@ def test_score_pairs_numpy_fallback_matches_compiled(spark, monkeypatch):
     assert compiled[cols].sort_values(["url_a", "url_b"]).reset_index(
         drop=True
     ).equals(spark_out[cols])
+
+
+def _cjk_batch(n_pairs: int, seed: int = 3) -> pa.RecordBatch:
+    """score_pairs' kernel input: pairs of 300 distinct CJK codepoints,
+    b = a with j of them replaced by codepoints a lacks, so the
+    distance is exactly j."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n_pairs):
+        cps = rng.choice(20000, size=300 + int(rng.integers(0, 40)), replace=False)
+        a = [chr(0x4E00 + int(c)) for c in cps]
+        b = list(a)
+        j = int(rng.integers(0, 8))
+        for n, pos in enumerate(rng.choice(len(a), size=j, replace=False)):
+            b[pos] = chr(0xAC00 + 8 * i + n)  # Hangul: never in a
+        rows.append(("".join(a), "".join(b), j))
+    text_a, text_b, dist = zip(*rows)
+    lens = [len(t) for t in text_a]
+    return pa.RecordBatch.from_pydict({
+        "url_a": [f"a{i}" for i in range(n_pairs)],
+        "url_b": [f"b{i}" for i in range(n_pairs)],
+        "len_a": lens, "len_b": lens, "k_eff": [5] * n_pairs,
+        "text_a": list(text_a), "text_b": list(text_b), "dist": list(dist),
+    })
+
+
+def test_score_wide_cjk_batch_in_sorted_chunks(monkeypatch):
+    """A non-ASCII Arrow batch of more than 512 pairs with more than 256
+    distinct codepoints each runs the numpy kernel in length-sorted
+    chunks of at most chunk_rows pairs, with codepoint costs."""
+    from sassy_spark.kernel import myers
+
+    batch = _cjk_batch(600)
+    calls = []
+    numpy_kernel = myers._banded_edit_distances_numpy
+
+    def recording(a_list, b_list, k, classes=None):
+        calls.append([len(b) for b in b_list])
+        return numpy_kernel(a_list, b_list, k, classes)
+
+    monkeypatch.setattr(myers, "_banded_edit_distances_numpy", recording)
+    out = pa.Table.from_batches(list(linkage._score_batches(
+        [batch], score_mode="global", alpha=None, max_overhang=None,
+        chunk_rows=512,
+    )))
+    dist = np.array(batch.column("dist"))
+    assert out.column("cost").to_pylist() == np.minimum(dist, 6).tolist()
+    assert sorted(len(c) for c in calls) == [88, 512]
+    # length-sorted: every length in the first chunk <= every one after
+    first, second = sorted(calls, key=len, reverse=True)
+    assert max(first) <= min(second)
 
 
 LOAD = (

@@ -5,12 +5,12 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "=== compiled kernel ==="
-# a build from scratch into a fresh cache dir, then the kernel tests, then
-# which kernel the engine runs, so a numpy fallback cannot pass unnoticed
+# a build from scratch into a fresh cache dir, then which kernel the
+# engine runs, so a numpy fallback cannot pass unnoticed (the kernel
+# tests run in the pytest step below)
 kdir="$(mktemp -d)"
 python -c "import sys; from pathlib import Path; from sassy_spark.kernel import cbanded; cbanded.load(Path(sys.argv[1])); print('built in', sys.argv[1])" "$kdir"
 rm -rf "$kdir"
-python -m pytest tests/test_kernel*.py -q
 python -c "from sassy_spark.kernel import myers; e = myers.C_KERNEL_ERROR; print('banded kernel:', 'compiled C' if e is None else 'NUMPY FALLBACK (' + e + ')')"
 
 echo "=== pytest ==="
