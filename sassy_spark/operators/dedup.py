@@ -125,29 +125,24 @@ def minhash_lsh_candidates(
     max_block_size: int = 512,
     candidates_out: str | None = None,
     est_margin: float | None = 0.2,
-    fused: bool = True,
 ) -> DataFrame:
     """The GATE of :func:`minhash_lsh_pairs` alone: staged candidate pairs
-    (id_a, id_b) after band-bucket join + signature-estimate pre-filter,
-    before the exact verify. Exposed so recall pins (q35) can audit the
-    production gate directly. Leaves no persisted RDDs behind.
+    (id_a, id_b) after band-bucket grouping + signature-estimate
+    pre-filter, before the exact verify. Exposed so recall pins (q35) can
+    audit the production gate directly. Leaves no persisted RDDs behind.
 
-    ``fused=True`` (default) builds candidate pairs with ONE shuffle:
-    ``groupBy(bucket).collect_list(id)`` + JVM-side in-array pair
-    expansion (nested ``transform`` over the id array) — identical pair
-    set to the join formulation, minus a full shuffle of the band-key
-    table (size-count + join-back), the bucket self-join, and one
-    persist/count barrier. The expansion is bounded by
-    ``max_block_size`` (<= cap^2/2 transient structs per bucket). The
-    one cost it accepts: an over-cap bucket materializes its id array
+    Candidate pairs come from ONE shuffle: ``groupBy(bucket)
+    .collect_list(id)`` + the JVM-side in-array expansion of
+    :func:`~sassy_spark.operators.linkage.block_pairs`, with buckets over
+    ``max_block_size`` dropped (<= cap^2/2 transient structs per bucket).
+    The one cost it accepts: an over-cap bucket materializes its id array
     once before the size filter drops it — pathological only when
-    millions of documents share an identical 8-hash minhash slice,
-    i.e. near-identical boilerplate that exact dedup (run before
-    near-dup in the pipeline) already removes. For corpora where that
-    assumption fails, ``fused=False`` keeps the count-prefilter
-    formulation that never materializes over-cap buckets."""
+    millions of documents share an identical 8-hash minhash slice, i.e.
+    near-identical boilerplate that exact dedup (run before near-dup in
+    the pipeline) already removes."""
     from pyspark import StorageLevel
 
+    from .linkage import block_pairs, broadcast_fits
     from .staging import stage_parquet
 
     rows_per_band = n_hashes // bands
@@ -161,39 +156,20 @@ def minhash_lsh_candidates(
     # count barrier entirely: the estimate pre-filter joins take
     # explicit broadcast hints on the sigs subtree (one build, exchange
     # reuse) and the whole gate collapses into the single staging job
-    # (round 6; one fewer job + barrier, measured ~0.5s at sf0.1).
-    # Above the gate (or on the unfused path, whose band-key table
-    # reads sigs from two branches) the original eager persist stands —
-    # big signature tables must not be broadcast.
-    spark = df.sparkSession
-    try:
-        _thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except Exception:  # noqa: BLE001 — e.g. "10MB" string form
-        _thr = 10 * 1024 * 1024
-    try:
-        _docs_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats unavailable: assume big
-        _docs_bytes = 1 << 62
-    sigs_small = fused and 0 < _docs_bytes * 4 <= _thr
-    if sigs_small:
-        # LAZY persist (round 6, session 2): executed-plan evidence
-        # showed the sketch UDF running 3x inside the one staging job
-        # (band path + both estimate-prefilter broadcast builds —
-        # exchange reuse does NOT fire across alias-renamed subtrees,
-        # verified with a minimal repro). A lazy persist keeps the
-        # single-job, no-barrier shape: the first stage that touches
-        # sigs (a broadcast build) populates the cache, every later
-        # stage reads it — sketch runs once. Released below, after the
-        # candidate set is staged.
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        # eager persist: the signature table feeds band keys (size agg +
-        # both self-join sides) AND the estimate pre-filter joins —
-        # lazily, the sketch UDF would run once per branch. Released
-        # after staging.
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    # (round 6; one fewer job + barrier, measured ~0.5s at sf0.1). Big
+    # signature tables must not be broadcast.
+    sigs_small = broadcast_fits(df, 4)
+    # Small: a LAZY persist (round 6). Executed-plan evidence
+    # showed the sketch UDF running 3x inside the one staging job (band
+    # path + both estimate-prefilter broadcast builds — exchange reuse
+    # does NOT fire across alias-renamed subtrees, verified with a
+    # minimal repro). Lazily, the first stage that touches sigs (a
+    # broadcast build) populates the cache and every later stage reads
+    # it — sketch runs once, no barrier. Big: an eager persist, since the
+    # band keys AND the estimate pre-filter joins read sigs. Released
+    # after the candidate set is staged.
+    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    if not sigs_small:
         sigs.count()
     band_cols = [
         F.xxhash64(
@@ -204,56 +180,12 @@ def minhash_lsh_candidates(
     band_keys = sigs.select(
         "id", F.explode(F.array(*band_cols)).alias("bucket")
     )
-    if fused:
-        groups = (
-            band_keys.groupBy("bucket")
-            .agg(F.collect_list("id").alias("ids"))
-            .where(
-                (F.size("ids") >= 2) & (F.size("ids") <= max_block_size)
-            )
-        )
-        pairs_arr = F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(
-                        F.col("ids"), i + F.lit(2),
-                        F.size(F.col("ids")) - i - F.lit(1),
-                    ),
-                    lambda y: F.struct(
-                        F.least(x, y).alias("id_a"),
-                        F.greatest(x, y).alias("id_b"),
-                    ),
-                ),
-            )
-        )
-        cand = (
-            groups.select(F.explode(pairs_arr).alias("p"))
-            .select("p.id_a", "p.id_b")
-            # strict < (matching the join branch's a.id < b.id): duplicate
-            # id values in one bucket would otherwise emit (id, id)
-            # self-pairs that survive jaccard verify at 1.0
-            .where(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        bk = None
-    else:
-        sizes = band_keys.groupBy("bucket").agg(F.count("*").alias("bs"))
-        bk = band_keys.join(sizes, "bucket").where(
-            (F.col("bs") >= 2) & (F.col("bs") <= max_block_size)
-        )
-        # eager persist: bk feeds BOTH sides of the bucket self-join —
-        # without it the explode + size-agg + join subtree (2 shuffles)
-        # runs twice
-        bk = bk.persist(StorageLevel.MEMORY_AND_DISK)
-        bk.count()
-        a, b = bk.alias("a"), bk.alias("b")
-        cand = (
-            a.join(b, "bucket")
-            .where(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
+    groups = band_keys.groupBy("bucket").agg(
+        F.collect_list("id").alias("ids")
+    ).where(F.size("ids") <= max_block_size)
+    cand = block_pairs(groups, "ids").select(
+        F.col("a").alias("id_a"), F.col("b").alias("id_b")
+    ).dropDuplicates(["id_a", "id_b"])
     if est_margin is not None:
         agree = F.aggregate(
             F.zip_with("sa", "sb", lambda x, y: (x == y).cast("int")),
@@ -286,8 +218,6 @@ def minhash_lsh_candidates(
         )
     cand = stage_parquet(cand, candidates_out, "minhash_cand")
     sigs.unpersist()
-    if bk is not None:
-        bk.unpersist()
     return cand
 
 
@@ -303,17 +233,16 @@ def minhash_lsh_pairs(
     max_block_size: int = 512,
     candidates_out: str | None = None,
     est_margin: float | None = 0.2,
-    fused: bool = True,
 ) -> DataFrame:
-    """Near-duplicate pairs via shingle->minhash->band->bucket-join, with an
+    """Near-duplicate pairs via shingle->minhash->band->bucket, with an
     exact n-gram Jaccard verify on candidates. Output:
     (id_a, id_b, jaccard).
 
     Physical shape (all shuffles on narrow columns):
       1. signatures once per doc (Python, one Arrow pass), band keys
          derived JVM-side (xxhash64 over signature slices);
-      2. bucket self-join -> candidate pairs, blocks capped at
-         ``max_block_size``;
+      2. one bucket grouping + in-array pair expansion -> candidate
+         pairs, buckets over ``max_block_size`` dropped;
       3. signature-estimate pre-filter: the minhash agreement fraction
          estimates Jaccard with sigma ~ sqrt(j(1-j)/n_hashes) (~0.044 at
          128 hashes), so candidates whose estimate falls below
@@ -335,7 +264,7 @@ def minhash_lsh_pairs(
         df, id_col=id_col, text_col=text_col, n_hashes=n_hashes,
         bands=bands, ngram=ngram, seed=seed,
         jaccard_threshold=jaccard_threshold, max_block_size=max_block_size,
-        candidates_out=candidates_out, est_margin=est_margin, fused=fused,
+        candidates_out=candidates_out, est_margin=est_margin,
     )
     return ngram_jaccard_verify(
         cand, df, id_col=id_col, text_col=text_col, ngram=ngram
@@ -514,6 +443,7 @@ def ngram_jaccard_verify(
     candidate set must not be broadcast."""
     from pyspark import StorageLevel
 
+    from .linkage import broadcast_fits
     from .staging import stage_parquet
 
     ids = (
@@ -541,18 +471,7 @@ def ngram_jaccard_verify(
             )
         ).alias("grams"),
     )
-    spark = docs.sparkSession
-    try:
-        thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except Exception:  # noqa: BLE001 — e.g. "10MB" string form
-        thr = 10 * 1024 * 1024
-    try:
-        docs_bytes = int(
-            docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats unavailable: assume big
-        docs_bytes = 1 << 62
-    small = 0 < docs_bytes * 32 <= thr
+    small = broadcast_fits(docs, 32)
     if not small:
         g = g.persist(StorageLevel.MEMORY_AND_DISK)
     maybe_bcast = F.broadcast if small else (lambda x: x)

@@ -18,19 +18,23 @@ reference src/pattern_tiling/general.rs:60-102) — onto Spark:
                           join/UDF (the relational analog of sassy's
                           early row termination, src/search.rs:1131-1162).
 
-Every shuffle is on an equi-join key; the small side (nothing here) is
-never broadcast-joined by hand — AQE handles skew splits; we handle the
-quadratic self-join skew at the algorithmic level (caps/refinement),
-which AQE cannot.
+Every shuffle is on an equi-join key. The one hand-placed broadcast is
+score_pairs' text attach, taken only when :func:`broadcast_fits` says
+Catalyst's own size estimate fits the session threshold. AQE handles
+skew splits; we handle the quadratic self-join skew at the algorithmic
+level (caps/refinement), which AQE cannot.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
+import logging
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize, url_host
@@ -53,6 +57,65 @@ def _fan_out_small_input(df: DataFrame, key: str) -> DataFrame:
     return df
 
 
+def broadcast_fits(df: DataFrame, factor: float = 1) -> bool:
+    """True when ``factor`` times Catalyst's size estimate of ``df`` fits
+    the session's broadcast threshold (the value Spark parsed, so "64MB"
+    and "1KB" mean what they say; -1 disables). ``factor`` scales a
+    scan-sized estimate up to the table actually built from it. An
+    estimate Spark cannot give counts as too big."""
+    thr = (
+        df.sparkSession._jsparkSession.sessionState()
+        .conf().autoBroadcastJoinThreshold()
+    )
+    try:
+        est = int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Py4JError as e:
+        logging.getLogger(__name__).warning(
+            "no size estimate for the broadcast gate, not broadcasting: %s", e
+        )
+        return False
+    return 0 < est * factor <= thr
+
+
+def block_pairs(
+    blocks: DataFrame,
+    members: str,
+    key: Callable[[Column], Column] = lambda m: m,
+    keep: Callable[[Column, Column], Column] | None = None,
+) -> DataFrame:
+    """Every i<j pair of the ``members`` array of each row of ``blocks``,
+    expanded JVM-side in the array (no self-join), as columns ``a`` and
+    ``b`` ordered so that ``key(a) < key(b)``. Two elements with the same
+    key never pair: duplicate ids in one block would otherwise yield
+    self-pairs. ``keep(x, y)``, when given, filters candidates inside the
+    array, before any pair row exists. Pairs are not deduplicated across
+    blocks; over-cap policy is the caller's."""
+
+    def pairs_of(x, i):
+        tail = F.slice(
+            F.col(members), i + F.lit(2), F.size(F.col(members)) - i - F.lit(1)
+        )
+        if keep is not None:
+            tail = F.filter(tail, lambda y: keep(x, y))
+        return F.transform(
+            tail,
+            lambda y: F.struct(
+                F.when(key(x) < key(y), x).otherwise(y).alias("a"),
+                F.when(key(x) < key(y), y).otherwise(x).alias("b"),
+            ),
+        )
+
+    pairs_arr = F.flatten(F.transform(F.col(members), pairs_of))
+    return (
+        blocks.where(F.size(members) >= 2)
+        .select(F.explode(pairs_arr).alias("_p"))
+        .where(key(F.col("_p.a")) < key(F.col("_p.b")))
+        .select("_p.a", "_p.b")
+    )
+
+
 # --------------------------------------------------------------- stage 1
 
 
@@ -62,8 +125,8 @@ def host_block_keys(
     """(url, block_key) from the URL host — the cheap structural block.
 
     ``len_of``: name of a text column whose length should ride along as
-    ``_l`` (saves the downstream keys-with-lens join in candidate_pairs —
-    the len is computed in the same scan that reads the url anyway)."""
+    ``_l`` for candidate_pairs' length prefilter (computed in the same
+    scan that reads the url anyway)."""
     cols = [
         F.col(url).alias("url"),
         F.concat(F.lit("host:"), url_host(F.col(url))).alias("block_key"),
@@ -92,7 +155,7 @@ def minhash_band_keys(
     ``with_len=True`` adds a ``_l`` column (codepoint length of the RAW
     text, computed JVM-side and passed through the sketch UDF) so
     candidate_pairs can push the |len_a-len_b| prefilter without a
-    separate keys-with-lens join."""
+    separate length join."""
     rows_per_band = n_hashes // bands
     from ..functions.hashing import (
         _splitmix64,
@@ -194,10 +257,8 @@ def blocking_keys(
 def candidate_pairs(
     keys: DataFrame,
     max_block_size: int = 256,
-    lens: DataFrame | None = None,
     k: int | None = None,
     k_frac: float | None = None,
-    fused: bool = True,
     out_partitions: int | None = None,
 ) -> DataFrame:
     """Canonical (url_a < url_b) pairs within block keys.
@@ -214,10 +275,21 @@ def candidate_pairs(
       * the pair set is deduped across keys (a pair found under 5 band
         keys is scored once).
 
-    ``lens`` (url, len) + k/k_frac push the |len_a - len_b| <= k prefilter
-    INTO pair generation, before the dedup shuffle: at 200k pages this cuts
-    the deduped pair set 6x (3.1M -> ~0.5M) and lets score_pairs skip its
-    length joins (len_a/len_b ride along in the output).
+    Pairs come from ONE shuffle of the key table —
+    ``groupBy(block_key).collect_list(struct(url, _l))`` + the JVM
+    in-array expansion of :func:`block_pairs`. Over-cap salting also
+    happens in-array: a big block's members split into ceil(bs/cap)^2
+    sub-arrays by the deterministic xxhash64(url) salt and each sub-array
+    expands on its own, so the grouped table has one consumer and the
+    sketch UDF upstream runs once per job. Trade-off: an over-cap block
+    materializes its member array once before refinement (a 10^6-member
+    host block is ~100 MB in one reducer row — acceptable transiently).
+
+    When ``keys`` carries ``_l`` (``blocking_keys(with_len=True)``) and
+    k/k_frac is given, the |len_a - len_b| <= k prefilter runs INSIDE the
+    expansion, before the dedup shuffle (at 200k pages this cuts the
+    deduped pair set 6x, 3.1M -> ~0.5M), and len_a/len_b ride along in
+    the output so score_pairs skips its length joins.
 
     ``out_partitions``: hash-repartition the PRE-dedup pair stream to
     exactly this many partitions on (url_a, url_b) and run the dedup
@@ -227,197 +299,65 @@ def candidate_pairs(
     skip its own fan-out exchange entirely (``link`` wires this to
     score_pairs' 1-task/core kernel fan-out: one exchange of the pair
     stream instead of dedup-exchange + repartition-exchange).
-
-    ``fused=True`` (default) generates pairs with ONE shuffle of the key
-    table — ``groupBy(block_key).collect_list(struct(url, len))`` + JVM
-    in-array combination expansion — the same rework that took q20's LSH
-    gate from 3 key-table shuffles to 1 (dedup.py:135-167). Over-cap
-    blocks keep IDENTICAL salted-refinement semantics, applied IN-ARRAY:
-    a big block's members partition into ceil(bs/cap)^2 sub-arrays by
-    the deterministic xxhash64(url) salt and each sub-array expands
-    independently — no second shuffle, and (round 6) no union branch
-    that would re-execute the groupBy subtree (the previous two-branch
-    shape ran the key shuffle + sketch UDF twice per job). Trade-off, as
-    in the fused LSH gate: an over-cap block materializes its member
-    array once before refinement (a 10^6-member host block is ~100 MB in
-    one reducer row — acceptable transiently; ``fused=False`` keeps the
-    size-count + self-join formulation that never materializes blocks).
-    Pair set is pinned identical to the join formulation by
-    test_linkage.
     """
-    # `_l` may already ride along from blocking_keys(with_len=True) — the
-    # length then came from the same scan that produced the key, and the
-    # keys-with-lens join below (one broadcast build + probe over the
-    # whole key table) disappears from the plan entirely
     has_len = "_l" in keys.columns
-    if not has_len and lens is not None:
-        keys = keys.join(lens.select("url", F.col("len").alias("_l")), "url")
-        has_len = True
-
-    def _pair_bound():
-        la, lb = F.col("p.la"), F.col("p.lb")
-        if k_frac is not None:
-            return F.abs(la - lb) <= F.ceil(F.greatest(la, lb) * F.lit(k_frac))
-        return F.abs(la - lb) <= F.lit(int(k if k is not None else 1 << 30))
-
-    def _dedup(df: DataFrame) -> DataFrame:
-        # out_partitions: one exchange serves both the dedup and the
-        # downstream scorer's fan-out (REPARTITION_BY_NUM is exempt from
-        # AQE coalescing; the dedup agg's ClusteredDistribution on the
-        # same keys is satisfied, so it adds no exchange of its own)
-        if out_partitions:
-            df = df.repartition(
-                out_partitions, F.col("url_a"), F.col("url_b")
-            )
-        return df.dropDuplicates(["url_a", "url_b"])
-
-    if fused:
-        member = (
-            F.struct(F.col("url"), F.col("_l"))
-            if has_len
-            else F.struct(F.col("url"), F.lit(0).alias("_l"))
+    member = F.struct("url", *(["_l"] if has_len else []))
+    grouped = keys.groupBy("block_key").agg(
+        F.collect_list(member).alias("ms")
+    ).where(F.size("ms") >= 2)
+    # over-cap refinement IN-ARRAY: pairs agree on the salt
+    # xxhash64(url) mod ceil(bs/cap)^2 iff they share a salted sub-block.
+    # A bs-member over-cap block pays bs * ns interpreted membership
+    # evals (bounded, hot blocks only).
+    n_salt = F.ceil(F.size("ms") / F.lit(max_block_size))
+    n_salt = (n_salt * n_salt).cast("long")
+    sub_arrays = F.when(
+        F.size("ms") <= max_block_size, F.array(F.col("ms"))
+    ).otherwise(
+        F.transform(
+            F.sequence(F.lit(0).cast("long"), n_salt - F.lit(1)),
+            lambda s: F.filter(
+                F.col("ms"),
+                lambda m: F.pmod(F.xxhash64(m["url"]), n_salt) == s,
+            ),
         )
-        grouped = keys.groupBy("block_key").agg(
-            F.collect_list(member).alias("ms")
-        ).where(F.size("ms") >= 2)
-        # over-cap refinement IN-ARRAY (round 6, session 2): the previous
-        # shape filtered `grouped` into a small branch and a big branch
-        # that exploded + re-salted + re-grouped — a UNION whose two
-        # branches each re-executed the whole upstream (key-table shuffle
-        # AND the sketch UDF ran twice per job; AQE's exchange reuse did
-        # not fire across the branches — executed-plan evidence in
-        # plans/r06). Salting now happens inside the collected array with
-        # the SAME deterministic function (xxhash64(url) mod
-        # ceil(bs/cap)^2): a big block's members are partitioned into
-        # sub-arrays per salt value and each sub-array pair-expands
-        # independently — the pair set is identical (pairs agree on the
-        # salt iff they shared a salted sub-block before), and `grouped`
-        # now has exactly ONE consumer: one groupBy, one exchange, one
-        # sketch pass. Cost accepted: a bs-member over-cap block pays
-        # bs * ns interpreted membership evals (bounded, hot blocks only).
-        n_salt = F.ceil(F.size("ms") / F.lit(max_block_size))
-        n_salt = (n_salt * n_salt).cast("long")
-        sub_arrays = F.when(
-            F.size("ms") <= max_block_size, F.array(F.col("ms"))
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0).cast("long"), n_salt - F.lit(1)),
-                lambda s: F.filter(
-                    F.col("ms"),
-                    lambda m: F.pmod(F.xxhash64(m["url"]), n_salt) == s,
-                ),
-            )
-        )
-        blocks = grouped.select(
-            F.explode(sub_arrays).alias("ms")
-        ).where(F.size("ms") >= 2)
-        def _arr_bound(x, y):
+    )
+
+    keep = None
+    if has_len and (k is not None or k_frac is not None):
+        # a discarded pair costs one predicate eval instead of a struct
+        # allocation + an exploded row + a row filter (measured 49% of
+        # pre-dedup pairs discarded at 12k pages)
+        def keep(x, y):
             la, lb = x["_l"], y["_l"]
             if k_frac is not None:
-                return F.abs(la - lb) <= F.ceil(
-                    F.greatest(la, lb) * F.lit(k_frac)
-                )
-            return F.abs(la - lb) <= F.lit(
-                int(k if k is not None else 1 << 30)
-            )
+                bound = F.ceil(F.greatest(la, lb) * F.lit(k_frac))
+            else:
+                bound = F.lit(int(k))
+            return F.abs(la - lb) <= bound
 
-        def _expand(x, i):
-            tail = F.slice(
-                F.col("ms"), i + F.lit(2),
-                F.size(F.col("ms")) - i - F.lit(1),
-            )
-            if has_len and (k is not None or k_frac is not None):
-                # length bound INSIDE the array expansion: a discarded
-                # pair costs one predicate eval instead of a struct
-                # allocation + an exploded row + a row filter (measured
-                # 49% of pre-dedup pairs discarded at 12k pages — the
-                # post-explode _pair_bound() below becomes a no-op but
-                # stays as the single source of the bound's semantics)
-                tail = F.filter(tail, lambda y: _arr_bound(x, y))
-            return F.transform(
-                tail,
-                lambda y: F.struct(
-                    F.least(x["url"], y["url"]).alias("url_a"),
-                    F.greatest(x["url"], y["url"]).alias("url_b"),
-                    F.when(x["url"] < y["url"], x["_l"])
-                    .otherwise(y["_l"])
-                    .alias("la"),
-                    F.when(x["url"] < y["url"], y["_l"])
-                    .otherwise(x["_l"])
-                    .alias("lb"),
-                ),
-            )
-
-        pairs_arr = F.flatten(F.transform(F.col("ms"), _expand))
-        exploded = (
-            blocks
-            .select(F.explode(pairs_arr).alias("p"))
-            # strict <: duplicate url values in one block would otherwise
-            # emit (u, u) self-pairs the join formulation excludes
-            .where(F.col("p.url_a") < F.col("p.url_b"))
-        )
-        if has_len:
-            exploded = exploded.where(_pair_bound())
-            return _dedup(
-                exploded.select(
-                    F.col("p.url_a").alias("url_a"),
-                    F.col("p.url_b").alias("url_b"),
-                    F.col("p.la").cast("int").alias("len_a"),
-                    F.col("p.lb").cast("int").alias("len_b"),
-                )
-            )
-        return _dedup(
-            exploded.select(
-                F.col("p.url_a").alias("url_a"),
-                F.col("p.url_b").alias("url_b"),
-            )
-        )
-
-    sizes = keys.groupBy("block_key").agg(F.count("*").alias("bs"))
-    n_salt = F.ceil(F.col("bs") / F.lit(max_block_size))
-    n_salt = (n_salt * n_salt).cast("long")
-    k2 = (
-        keys.join(sizes, "block_key")
-        .where(F.col("bs") >= 2)
-        .withColumn(
-            "jkey",
-            F.when(
-                F.col("bs") > max_block_size,
-                F.concat(
-                    F.col("block_key"),
-                    F.lit("#"),
-                    F.pmod(F.xxhash64("url"), n_salt).cast("string"),
-                ),
-            ).otherwise(F.col("block_key")),
-        )
-        .select("url", "jkey", *(["_l"] if has_len else []))
+    pairs = block_pairs(
+        grouped.select(F.explode(sub_arrays).alias("ms")),
+        "ms",
+        key=lambda m: m["url"],
+        keep=keep,
     )
-    a = k2.alias("a")
-    b = k2.alias("b")
-    j = a.join(b, "jkey").where(F.col("a.url") < F.col("b.url"))
+    cols = [F.col("a")["url"].alias("url_a"), F.col("b")["url"].alias("url_b")]
     if has_len:
-        la, lb = F.col("a._l"), F.col("b._l")
-        if k_frac is not None:
-            bound = F.ceil(F.greatest(la, lb) * F.lit(k_frac))
-        else:
-            bound = F.lit(int(k if k is not None else 1 << 30))
-        j = j.where(F.abs(la - lb) <= bound)
-        pairs = _dedup(
-            j.select(
-                F.col("a.url").alias("url_a"),
-                F.col("b.url").alias("url_b"),
-                la.cast("int").alias("len_a"),
-                lb.cast("int").alias("len_b"),
-            )
+        cols += [
+            F.col("a")["_l"].cast("int").alias("len_a"),
+            F.col("b")["_l"].cast("int").alias("len_b"),
+        ]
+    pairs = pairs.select(*cols)
+    if out_partitions:
+        # one exchange serves both the dedup and the downstream scorer's
+        # fan-out (REPARTITION_BY_NUM is exempt from AQE coalescing; the
+        # dedup agg's ClusteredDistribution on the same keys is
+        # satisfied, so it adds no exchange of its own)
+        pairs = pairs.repartition(
+            out_partitions, F.col("url_a"), F.col("url_b")
         )
-    else:
-        pairs = _dedup(
-            j.select(
-                F.col("a.url").alias("url_a"),
-                F.col("b.url").alias("url_b"),
-            )
-        )
-    return pairs
+    return pairs.dropDuplicates(["url_a", "url_b"])
 
 
 # --------------------------------------------------------------- stage 2
@@ -533,18 +473,7 @@ def score_pairs(
     # delta ~+0.4 s AGAINST the dict: the join attach is already
     # shuffle-free, and the dict path re-pays the corpus as a driver
     # collect + 24 MB pickle broadcast per job.)
-    spark = df.sparkSession
-    try:
-        thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except Exception:  # noqa: BLE001 — e.g. "10MB" string form
-        thr = 10 * 1024 * 1024
-    try:
-        texts_bytes = int(
-            texts._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats unavailable: assume big
-        texts_bytes = 1 << 62
-    maybe_bcast = F.broadcast if 0 < texts_bytes <= thr else (lambda x: x)
+    maybe_bcast = F.broadcast if broadcast_fits(texts) else (lambda x: x)
     df = df.join(
         maybe_bcast(
             texts.select(F.col(url).alias("url_a"), F.col("_t").alias("text_a"))
@@ -561,23 +490,22 @@ def score_pairs(
         "url_a string, url_b string, len_a int, len_b int, k_eff int, "
         "cost int, normalized_cost double, is_match boolean"
     )
-    # ~512 pairs per numpy kernel call: the Peq gather tables of a larger
-    # batch fall out of cache and the numpy kernel goes memory-bound
-    # (measured 2x slowdown at 4096) — the numpy analog of sassy's 1 MiB
-    # task-batch bound (bin/input_iterator.rs:7-9). The compiled global
-    # kernel runs pair by pair on a whole ASCII Arrow batch and takes no
-    # chunks. Tunable for concurrency-level cache-pressure experiments.
-    import functools
-    import os
-
-    chunk_rows = int(os.environ.get("SASSY_CHUNK_ROWS", "512"))
     return df.mapInArrow(
         functools.partial(
             _score_batches, score_mode=score_mode, alpha=alpha,
-            max_overhang=max_overhang, chunk_rows=chunk_rows,
+            max_overhang=max_overhang, chunk_rows=_CHUNK_ROWS,
         ),
         schema=out_schema,
     )
+
+
+# ~512 pairs per numpy kernel call: the Peq gather tables of a larger
+# batch fall out of cache and the numpy kernel goes memory-bound
+# (measured 2x slowdown at 4096) — the numpy analog of sassy's 1 MiB
+# task-batch bound (bin/input_iterator.rs:7-9). The compiled global
+# kernel runs pair by pair on a whole ASCII Arrow batch and takes no
+# chunks.
+_CHUNK_ROWS = 512
 
 
 def _utf8_buffer(arr) -> tuple[np.ndarray, np.ndarray]:
@@ -835,8 +763,8 @@ def link(
         # at 12k pages: staged median 8.31s / unstaged 7.56s, unstaged
         # faster in all 5)
         keys = _stage(keys, checkpoint_dir, "block_keys", fingerprint)
-    # lengths already ride along on the key table (with_len=True above);
-    # candidate_pairs sees `_l` and skips its keys-with-lens join.
+    # lengths already ride along on the key table (with_len=True above),
+    # so candidate_pairs bounds pair lengths in-array.
     # On the no-checkpoint path, fuse the dedup exchange with the
     # scorer's fan-out: the pair stream is hash-repartitioned ONCE to
     # the kernel's task count, deduped in place, and score_pairs

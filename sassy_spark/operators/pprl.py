@@ -188,7 +188,6 @@ def hlsh_candidates(
     words_col: str = "clk_words",
     pair_a: str = "url_a",
     pair_b: str = "url_b",
-    max_block_size: int | None = None,
 ) -> DataFrame:
     """Hamming-LSH blocking over packed CLKs (Durham-style HLSH).
 
@@ -205,46 +204,24 @@ def hlsh_candidates(
 
     Plan: posexplode to (segment, value), ONE shuffle grouping by the
     compound key, then JVM in-array pair expansion within each bucket
-    (the fused-gate shape proven in operators/dedup.py). The fused
-    form matters beyond the shuffle count: a (seg, val) SELF-JOIN
-    would carry the upstream encode expression into both join
-    subtrees, and Catalyst's projection collapse then re-evaluates it
-    per joined row — measured 119 s vs ~2 s at 500 docs. The groupBy
-    materializes values into the exchange exactly once. Optional
-    ``max_block_size`` drops over-cap buckets (skew guard, same
-    trade-off knob as the dedup gate); None keeps it exact.
+    (:func:`~sassy_spark.operators.linkage.block_pairs`, the shape of
+    the dedup gate). The grouped form matters beyond the shuffle count:
+    a (seg, val) SELF-JOIN would carry the upstream encode expression
+    into both join subtrees, and Catalyst's projection collapse then
+    re-evaluates it per joined row — measured 119 s vs ~2 s at 500
+    docs. The groupBy materializes values into the exchange exactly
+    once. Buckets are not capped: the candidate set is exact.
     """
+    from .linkage import block_pairs
+
     seg = packed.select(
         F.col(url).alias("_u"),
         F.posexplode(words_col).alias("_seg", "_val"),
     ).where(F.col("_val") != 0)
-    groups = (
-        seg.groupBy("_seg", "_val")
-        .agg(F.collect_list("_u").alias("_us"))
-        .where(F.size("_us") >= 2)
-    )
-    if max_block_size is not None:
-        groups = groups.where(F.size("_us") <= max_block_size)
-    pairs_arr = F.flatten(
-        F.transform(
-            F.col("_us"),
-            lambda x, i: F.transform(
-                F.slice(
-                    F.col("_us"),
-                    i + F.lit(2),
-                    F.size(F.col("_us")) - i - F.lit(1),
-                ),
-                lambda y: F.struct(
-                    F.least(x, y).alias(pair_a),
-                    F.greatest(x, y).alias(pair_b),
-                ),
-            ),
-        )
-    )
+    groups = seg.groupBy("_seg", "_val").agg(F.collect_list("_u").alias("_us"))
     return (
-        groups.select(F.explode(pairs_arr).alias("_p"))
-        .select(f"_p.{pair_a}", f"_p.{pair_b}")
-        .where(F.col(pair_a) < F.col(pair_b))
+        block_pairs(groups, "_us")
+        .select(F.col("a").alias(pair_a), F.col("b").alias(pair_b))
         .dropDuplicates()
     )
 

@@ -51,11 +51,14 @@ def test_minhash_lsh_finds_near_dups(docs):
 
 
 def test_minhash_gate_fused_matches_join_formulation(spark):
-    """The fused gate (groupBy collect_list + in-array pair expansion)
-    must emit EXACTLY the candidate set of the count-prefilter + bucket
-    self-join formulation — same buckets, same cap semantics, same
-    est-filter — on a corpus with planted near-dup clusters large enough
-    to exercise multi-member buckets."""
+    """The one-shuffle gate (groupBy collect_list + in-array pair
+    expansion) must emit EXACTLY the candidate set of a plain-Python
+    oracle over the same (id, bucket) rows — same buckets, same cap,
+    same est-filter — on a corpus with planted near-dup clusters large
+    enough to exercise multi-member buckets."""
+    import itertools
+    from collections import defaultdict
+
     base = (
         "shared boilerplate paragraph that every page in this cluster "
         "repeats almost verbatim with small local edits sprinkled in"
@@ -63,30 +66,50 @@ def test_minhash_gate_fused_matches_join_formulation(spark):
     rows = [(i, base + f" variant {i % 4}") for i in range(24)]
     rows += [(100 + i, f"unique page number {i} with its own words") for i in range(6)]
     docs2 = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    n_hashes, bands = 128, 16
+    rpb = n_hashes // bands
+    sigs = dedup.minhash_signatures(docs2).cache()
+    sig = {r.id: r.sig for r in sigs.collect()}
+    buckets = defaultdict(list)
+    for r in sigs.select(
+        "id",
+        F.explode(F.array(*[
+            F.xxhash64(F.lit(bi), F.slice("sig", bi * rpb + 1, rpb))
+            for bi in range(bands)
+        ])).alias("bucket"),
+    ).collect():
+        buckets[r.bucket].append(r.id)
+    sigs.unpersist()
+
+    def oracle(jaccard_threshold, est_margin, max_block_size=512):
+        out = set()
+        for ids in buckets.values():
+            if len(ids) > max_block_size:
+                continue
+            for x, y in itertools.combinations(sorted(ids), 2):
+                agree = sum(a == b for a, b in zip(sig[x], sig[y]))
+                if x < y and agree / n_hashes >= jaccard_threshold - est_margin:
+                    out.add((x, y))
+        return out
+
     kw = dict(jaccard_threshold=0.4, est_margin=0.2)
-    fused = {
+    got = {
         (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_candidates(docs2, fused=True, **kw).collect()
+        for r in dedup.minhash_lsh_candidates(docs2, **kw).collect()
     }
-    joined = {
-        (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_candidates(docs2, fused=False, **kw).collect()
-    }
-    assert fused == joined
-    assert fused  # non-vacuous: the planted cluster must collide
-    assert all(a < b for a, b in fused)
-    # cap semantics identical too: a cap small enough to drop the big
-    # cluster's buckets must drop them in BOTH formulations
+    assert got == oracle(**kw)
+    assert got  # non-vacuous: the planted cluster must collide
+    assert all(a < b for a, b in got)
+    # cap semantics: a cap small enough to drop the big cluster's
+    # buckets must drop exactly those
     kw_cap = dict(jaccard_threshold=0.4, est_margin=0.2, max_block_size=3)
-    fused_c = {
+    got_c = {
         (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_candidates(docs2, fused=True, **kw_cap).collect()
+        for r in dedup.minhash_lsh_candidates(docs2, **kw_cap).collect()
     }
-    joined_c = {
-        (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_candidates(docs2, fused=False, **kw_cap).collect()
-    }
-    assert fused_c == joined_c
+    assert got_c == oracle(**kw_cap)
+    assert got_c < got
 
 
 def test_ngram_jaccard_values(docs, spark):
@@ -170,13 +193,13 @@ def test_minhash_signature_estimates_jaccard(docs, spark):
 
 def test_minhash_fused_gate_no_self_pairs_on_duplicate_ids(spark):
     """Duplicate id values sharing a bucket must not emit (id, id)
-    self-pairs from the fused gate's least/greatest pair expansion —
-    the strict id_a < id_b guard matches the join branch's a.id < b.id."""
+    self-pairs from the gate's in-array pair expansion — block_pairs'
+    strict key(a) < key(b) guard drops them."""
     text = "the same page text repeated under one id twice for this test"
     rows = [(7, text), (7, text), (9, text + " with a small local edit")]
     docs2 = spark.createDataFrame(rows, ["doc_id", "text"])
     cand = dedup.minhash_lsh_candidates(
-        docs2, jaccard_threshold=0.4, est_margin=0.2, fused=True
+        docs2, jaccard_threshold=0.4, est_margin=0.2
     )
     got = {(r.id_a, r.id_b) for r in cand.collect()}
     assert all(a < b for a, b in got)

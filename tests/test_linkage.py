@@ -311,9 +311,13 @@ def test_link_leaves_no_persisted_rdds(pages, spark):
 
 
 def test_candidate_pairs_fused_equals_join(spark):
-    """The fused one-shuffle pair generation must yield EXACTLY the join
-    formulation's pair set — including salted refinement of an over-cap
-    block and the length prefilter."""
+    """The one-shuffle in-array pair generation must yield EXACTLY the
+    pair set of a plain-Python oracle over the same key rows — including
+    salted refinement of an over-cap block and the length prefilter."""
+    import itertools
+    import math
+    from collections import defaultdict
+
     from pyspark.sql import functions as F
 
     from sassy_spark.operators.linkage import candidate_pairs
@@ -323,39 +327,83 @@ def test_candidate_pairs_fused_equals_join(spark):
     rows = [(f"u{i:04d}", "hot") for i in range(300)]
     rows += [(f"u{i:04d}", f"b{i % 7}") for i in range(40)]
     rows += [("lone", "single")]
+    lens = {f"u{i:04d}": 100 + (i % 30) for i in range(300)}
+    lens["lone"] = 100
     keys = spark.createDataFrame(rows, ["url", "block_key"])
-    lens = spark.createDataFrame(
-        [(f"u{i:04d}", 100 + (i % 30)) for i in range(300)]
-        + [("lone", 100)],
-        ["url", "len"],
+    keys_l = spark.createDataFrame(
+        [(u, b, lens[u]) for u, b in rows],
+        "url string, block_key string, _l long",
     )
+    cap = 64
 
-    def canon(df):
-        return sorted(tuple(r) for r in df.collect())
+    def oracle(keys, k=None, k_frac=None, **_):
+        has_len = "_l" in keys.columns
+        blocks = defaultdict(list)
+        for r in keys.select(
+            "url", "block_key", F.xxhash64("url").alias("h"),
+            *(["_l"] if has_len else []),
+        ).collect():
+            blocks[r.block_key].append(r)
+        out = set()
+        for ms in blocks.values():
+            n_salt = math.ceil(len(ms) / cap) ** 2
+            subs = defaultdict(list)
+            for m in ms:
+                # Python's % of a negative hash matches Spark's pmod
+                subs[m.h % n_salt if len(ms) > cap else 0].append(m)
+            for sub in subs.values():
+                for x, y in itertools.combinations(sub, 2):
+                    x, y = sorted((x, y), key=lambda m: m.url)
+                    if x.url == y.url:
+                        continue
+                    if not has_len:
+                        out.add((x.url, y.url))
+                        continue
+                    if k_frac is not None:
+                        bound = math.ceil(max(x._l, y._l) * k_frac)
+                    else:
+                        bound = k if k is not None else math.inf
+                    if abs(x._l - y._l) <= bound:
+                        out.add((x.url, y.url, x._l, y._l))
+        return sorted(out)
 
-    for kwargs in (
-        {},  # no lens
-        {"lens": lens, "k": 10},
-        {"lens": lens, "k_frac": 0.05},
+    for keys_in, kwargs in (
+        (keys, {}),  # no lengths
+        (keys_l, {"k": 10}),
+        (keys_l, {"k_frac": 0.05}),
         # out_partitions: the dedup exchange doubles as the scorer
         # fan-out — pair set must be unchanged and the output must
         # arrive in exactly that many partitions
-        {"lens": lens, "k": 10, "out_partitions": 16},
+        (keys_l, {"k": 10, "out_partitions": 16}),
     ):
-        got_f = candidate_pairs(
-            keys, max_block_size=64, fused=True, **kwargs
-        )
-        got_j = candidate_pairs(
-            keys, max_block_size=64, fused=False, **kwargs
-        )
-        assert canon(got_f) == canon(got_j), kwargs
-        # canonical order + no self-pairs
-        bad = got_f.where(F.col("url_a") >= F.col("url_b")).count()
-        assert bad == 0
+        got = candidate_pairs(keys_in, max_block_size=cap, **kwargs)
+        want = oracle(keys_in, **kwargs)
+        assert sorted(tuple(r) for r in got.collect()) == want, kwargs
+        # non-vacuous: the hot block pairs, but far below 300*299/2
+        assert 0 < len(want) < 300 * 299 // 2
         if kwargs.get("out_partitions"):
-            assert (
-                got_f.rdd.getNumPartitions() == kwargs["out_partitions"]
-            )
+            assert got.rdd.getNumPartitions() == kwargs["out_partitions"]
+
+
+def test_broadcast_fits_reads_parsed_threshold(spark):
+    """The broadcast gate reads the threshold Spark parsed: "1KB" must
+    refuse a frame estimated above 1 KiB that the default 64 MB
+    threshold admits (a raw int() of "1KB" fell back to 10 MiB)."""
+    from sassy_spark.operators.linkage import broadcast_fits
+
+    df = spark.range(1000)  # estimated at 8 bytes per row
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        assert broadcast_fits(df)
+        spark.conf.set(key, "1KB")
+        assert not broadcast_fits(df)
+        assert broadcast_fits(spark.range(100))  # 800 bytes
+        assert not broadcast_fits(spark.range(100), factor=2)
+        spark.conf.set(key, "-1")
+        assert not broadcast_fits(spark.range(1))
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_reciprocal_best_pairs(spark):

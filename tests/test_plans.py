@@ -209,3 +209,28 @@ def test_score_pairs_narrow_shuffle_shape(spark):
         if "REPARTITION_BY_NUM" in ln
     ]
     assert rep and all("text" not in ln for ln in rep), rep
+
+
+def test_link_executed_plan_shape(spark, tmp_path):
+    """Pin for the whole ER job's executed plan (``link()`` without a
+    checkpoint dir): one sketch UDF pass, one key-table exchange, one
+    pair exchange that serves both the dedup and the kernel fan-out,
+    both text attachments broadcast, one kernel stage."""
+    from sassy_spark.operators.linkage import link
+    from sassy_spark.sources.pages import generate_pages
+
+    path = str(tmp_path / "pages")
+    generate_pages(spark, 200, seed=3).drop("cluster_id").write.parquet(path)
+    plan = plans.physical_plan(
+        link(spark.read.parquet(path), k=None, k_frac=0.05)
+    )
+    lines = plan.splitlines()
+
+    def count(marker):
+        return sum(marker in ln for ln in lines)
+
+    assert count("MapInPandas bandify") == 1, plan
+    assert count("Exchange hashpartitioning(block_key") == 1, plan
+    assert count("REPARTITION_BY_NUM") == 1, plan
+    assert count("BroadcastHashJoin") == 2, plan
+    assert count("MapInArrow") == 1, plan
