@@ -9,18 +9,14 @@ as candidate-pairs-scored/sec (the north metric).
 
 Every reported number is MEASURED in this run: the F1 block runs
 tools/evaluate_f1.evaluate on 2000 synthetic pages, and the scaling
-block runs the tools/kernel_scaling barrier-synchronized protocol
-(median of --repeats, warmup + synthesis excluded, same-conditions and
-raw modes) — no hardcoded claims, and one method for the aggregate
-(median-duration concurrent rate) shared with the standalone tool.
+block runs tools/scaling.py's N-vs-4N protocol on this machine's cores
+(not measurable below 4) — no hardcoded claims.
 
 CRASH-PROOF BY CONSTRUCTION (round-4 VERDICT #1: a child timeout inside
 the scaling phase destroyed the whole round's bench record): every phase
 runs inside its own try/except that records {"errors": {phase: ...}}
 instead of raising, the final JSON is emitted from a finally block, and
-the process exits 0 whenever ANY phase produced numbers. The scaling
-protocols are themselves deadline-bounded (SASSY_SCALING_BUDGET_SEC) and
-return truncated-but-valid results instead of raising.
+the process exits 0.
 """
 
 from __future__ import annotations
@@ -35,10 +31,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 sys.path.insert(0, str(Path(__file__).resolve().parent / "tools"))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 ER_PAGES = int(os.environ.get("SASSY_BENCH_PAGES", "12000"))
-F1_PAGES = int(os.environ.get("SASSY_BENCH_F1_PAGES", "2000"))
-SCALING_REPEATS = int(os.environ.get("SASSY_BENCH_SCALING_REPEATS", "5"))
+F1_PAGES = 2000
+ER_REPS = 3
+ORACLE_SUITE_BUDGET_SEC = 300
 
 BENCH_QUERIES = [
     "q02_agg_partial_final",
@@ -70,55 +67,11 @@ BENCH_QUERIES = [
 ]
 
 
-def _latest_committed_scaling() -> dict | None:
-    """Newest committed BENCH/spark_scaling_*.json that carries >=1 clean
-    rep — the fallback evidence when the live in-bench protocol lands
-    nothing. Returns a small labeled summary, never raises."""
-    try:
-        bench_dir = Path(__file__).resolve().parent / "BENCH"
-        candidates = []
-        for p in bench_dir.glob("spark_scaling_*.json"):
-            try:
-                d = json.loads(p.read_text())
-            except (OSError, json.JSONDecodeError):
-                continue
-            if d.get("efficiencies"):
-                # rank: complete (untruncated) beats truncated, then the
-                # newer round by filename, then mtime — NOT mtime alone
-                # (a checkout can rewrite every mtime at once)
-                rank = (not d.get("truncated", False), p.name, p.stat().st_mtime)
-                candidates.append((rank, p, d))
-        if not candidates:
-            return None
-        _, p, d = max(candidates, key=lambda t: t[0])
-        return {
-            "note": (
-                "pre-measured committed run (same tools/spark_scaling.py "
-                "protocol on this box), attached because the live "
-                "in-bench attempt above landed zero clean reps — NOT a "
-                "live measurement from this bench invocation"
-            ),
-            "file": f"BENCH/{p.name}",
-            "n_pairs": d.get("n_pairs"),
-            "budget_sec": d.get("budget_sec"),
-            "wall_sec": d.get("wall_sec"),
-            "truncated": d.get("truncated"),
-            "samples": d.get("efficiencies"),
-            "samples_fleet": d.get("efficiencies_fleet"),
-            "efficiency_median_8_to_32": d.get("efficiency_median"),
-            "efficiency_min": d.get("efficiency_min"),
-            "efficiency_fleet_median": d.get("efficiency_fleet_median"),
-            "n_discarded": d.get("n_discarded"),
-            "pairs_per_sec_8_loaded": d.get("pps_lo_median"),
-            "pairs_per_sec_32": d.get("pps_hi_median"),
-        }
-    except Exception:  # noqa: BLE001 — fallback must never break bench
-        return None
-
-
 def _guard(out: dict, phase: str, fn) -> None:
     """Run one bench phase; a failure becomes out['errors'][phase], never
-    an exception — the driver must ALWAYS receive the final JSON line."""
+    an exception — the driver must ALWAYS receive the final JSON line.
+    Its wall goes to out['phase_sec'][phase]."""
+    t0 = time.time()
     try:
         fn()
     except BaseException as exc:  # noqa: BLE001 — includes TimeoutExpired
@@ -130,6 +83,19 @@ def _guard(out: dict, phase: str, fn) -> None:
         out.setdefault("errors", {})[phase] = (
             f"{type(exc).__name__}: {exc}"[:500]
         )
+    finally:
+        out.setdefault("phase_sec", {})[phase] = round(time.time() - t0, 1)
+
+
+def _end_jvm(spark) -> None:
+    """Stop Spark and end its JVM (it exits when its stdin closes), so
+    the scaling phase's child sessions have the machine to themselves."""
+    from pyspark import SparkContext
+
+    spark.stop()
+    jvm = SparkContext._gateway.proc
+    jvm.stdin.close()
+    jvm.wait(timeout=60)
 
 
 def _run(out: dict) -> None:
@@ -177,14 +143,14 @@ def _run(out: dict) -> None:
 
     def phase_er() -> None:
         # flagship: ER candidate scoring throughput on synthetic pages —
-        # best-of-N (default 3), all samples reported (co-tenancy swings
+        # best-of-3, all samples reported (co-tenancy swings
         # 2-4x and the first rep pays JVM/worker warmup at this sf)
         pages = generate_pages(spark, ER_PAGES, seed=42).drop("cluster_id")
         pages = pages.persist()
         n_pages = pages.count()
         er_samples = []
         n_pairs = 0
-        for _ in range(int(os.environ.get("SASSY_BENCH_ER_REPS", "3"))):
+        for _ in range(ER_REPS):
             t0 = time.time()
             scored = linkage.link(pages, k=None, k_frac=0.05)
             n_pairs = scored.count()
@@ -214,17 +180,16 @@ def _run(out: dict) -> None:
         # toPandas + DuckDB adds on top, but the Spark side is what this
         # repo controls.
         qs = E.queries()
-        # Hard wall budget (same philosophy as the scaling protocols):
+        # Hard wall budget:
         # the suite grew past 79 queries, and a loaded box can stretch
         # the ~10s queries 3-4x — truncate and report rather than risk
         # blowing the driver's whole-bench timeout. Untimed queries are
         # listed so a truncated run is visibly partial, never silent.
-        budget = float(os.environ.get("SASSY_ORACLE_SUITE_BUDGET_SEC", "300"))
         t0 = time.time()
         n_ok = 0
         skipped = []
         for name, fn in qs.items():
-            if time.time() - t0 > budget:
+            if time.time() - t0 > ORACLE_SUITE_BUDGET_SEC:
                 skipped.append(name)
                 continue
             try:
@@ -244,123 +209,19 @@ def _run(out: dict) -> None:
         _guard(out, "f1", phase_f1)
     if os.environ.get("SASSY_BENCH_ORACLE_SUITE", "1") == "1":
         _guard(out, "oracle_suite", phase_oracle_suite)
-    _guard(out, "spark_stop", spark.stop)
-
-    def phase_kernel_scaling() -> None:
-        # scaling-efficiency evidence (north metric #3): the documented
-        # barrier-synchronized protocol from tools/kernel_scaling.py —
-        # same-conditions mode (equal machine occupancy at both N, the
-        # cluster-realistic comparison) plus the raw idle-box bound
-        from kernel_scaling import calibrate_dilation, run_protocol
-
-        same = run_protocol(2048, SCALING_REPEATS, same_conditions=True)
-        raw = run_protocol(2048, SCALING_REPEATS, same_conditions=False)
-        cal = calibrate_dilation()
-        out["kernel_scaling"] = {
-            "protocol": "tools/kernel_scaling.py (barrier-synced, "
-            "warmup+synthesis excluded, three-axis in-window pulse-probe "
-            "contamination rule: reps whose dilation probes disagree "
-            "between the two compared windows — arith >20%, page-fault "
-            ">2x, stream-bandwidth >1.5x — are discarded and reported)",
-            "same_conditions_efficiency_8_to_32": same["efficiency_median"],
-            "same_conditions_samples": same["efficiencies"],
-            "same_conditions_min": same["efficiency_min"],
-            "same_conditions_window_efficiency": same[
-                "efficiency_window_median"
-            ],
-            "same_conditions_window_samples": [
-                s["eff_window"] for s in same["samples"]
-            ],
-            "same_conditions_discarded": same["n_discarded"],
-            "raw_idlebox_efficiency_8_to_32": raw["efficiency_median"],
-            "raw_idlebox_samples": raw["efficiencies"],
-            "raw_idlebox_window_efficiency": raw["efficiency_window_median"],
-            "raw_idlebox_discarded": raw["n_discarded"],
-            "arith_dilation_floor": cal["arith_efficiency_lo_to_hi"],
-            "agg_pairs_per_sec_8_loaded": same["agg_lo_median"],
-            "agg_pairs_per_sec_32": same["agg_hi_median"],
-        }
-        out["kernel_scaling_efficiency_8_to_32"] = same["efficiency_median"]
-
-    def phase_spark_scaling() -> None:
-        # Spark-level capacity-normalized scaling (north metric #3, the
-        # ENGINE): the real score_pairs stage (join + repartition + Arrow +
-        # mapInPandas kernel) as 4 CONCURRENT local[8] engines vs one
-        # local[32] engine running the same 4 jobs concurrently, on the
-        # same parquet input. Persistent warmed engines (one JVM spin-up
-        # per protocol run) under a hard wall-clock budget
-        # (SASSY_SCALING_BUDGET_SEC, default 900) — the protocol returns
-        # truncated-but-valid JSON instead of ever raising.
-        from spark_scaling import run_protocol as spark_run_protocol
-
-        # 24576 pairs: with PERSISTENT warmed engines the round-4 reason
-        # for 98304 (fixed JVM/job cost at ~8 s windows) no longer holds —
-        # the hi window at 24k is ~40 s of pure scoring (4 concurrent
-        # jobs x 24k pairs), so the ~1.5 s fixed stage cost is <5%. At
-        # 98304 the windows (~170 s) plus warmup blew EVERY bench budget
-        # on this box (round-5 measured: spin-up alone ~430 s/engine) and
-        # the driver got zero scaling samples — a smaller honest window
-        # beats a bigger impossible one.
-        ss = spark_run_protocol(
-            int(os.environ.get("SASSY_BENCH_SPARK_PAIRS", "24576")),
-            int(os.environ.get("SASSY_BENCH_SPARK_REPEATS", "3")),
-        )
-        out["spark_scaling"] = {
-            "protocol": "tools/spark_scaling.py (score_pairs stage, "
-            "capacity-normalized SYMMETRIC-workload scaling: 4 concurrent "
-            "local[8] engines, one scoring job each, barrier-synced, vs "
-            "one local[32] engine running the same 4 independent jobs "
-            "concurrently (driver threads, fair-share kernel partitioning: "
-            "cores/jobs partitions per job so both sides run exactly "
-            "`cores` concurrent kernel tasks); persistent warmed engines "
-            "(one JVM spin-up per protocol run, reps served through a "
-            "go-file barrier) under a hard wall-clock budget; SANDWICH "
-            "reps lo,hi,lo — hi pairs/s normalized against the MEAN of "
-            "the two bracketing fleet windows (cancels in-rep drift); "
-            "contamination rules: bracket agreement <= 1.25, three-axis "
-            "pulse-probe agreement (arith 20%, fault 2x, bandwidth 1.5x) "
-            "AND efficiency <= 1.5; per-rep quiet gate (solo canary "
-            "within 1.25x of running floor OR 3-canary plateau, bounded "
-            "wait))",
-            "n_pairs": ss["n_pairs"],
-            "budget_sec": ss["budget_sec"],
-            "wall_sec": ss["wall_sec"],
-            "truncated": ss["truncated"],
-            "protocol_error": ss["protocol_error"],
-            "efficiency_median_8_to_32": ss["efficiency_median"],
-            "efficiency_min": ss["efficiency_min"],
-            "samples": ss["efficiencies"],
-            "efficiency_fleet_median": ss.get("efficiency_fleet_median"),
-            "efficiency_fleet_min": ss.get("efficiency_fleet_min"),
-            "samples_fleet": ss.get("efficiencies_fleet"),
-            "n_discarded": ss["n_discarded"],
-            "pairs_per_sec_8_loaded": ss["pps_lo_median"],
-            "pairs_per_sec_32": ss["pps_hi_median"],
-        }
-        if not ss["efficiencies"]:
-            # The live in-bench attempt landed zero clean reps (budget
-            # expiry or contamination discards under co-tenant load —
-            # both rounds 4/5 saw windows where NO rep survives the
-            # probe rules). So the driver still sees scaling evidence,
-            # attach the most recent COMMITTED clean standalone run,
-            # clearly labeled as such: same protocol, same tool, run on
-            # this box, file + numbers inlined for provenance. This is
-            # pre-measured evidence, NOT a live measurement from this
-            # bench invocation.
-            ref = _latest_committed_scaling()
-            if ref is not None:
-                out["spark_scaling"]["committed_reference"] = ref
+    _guard(out, "spark_stop", lambda: _end_jvm(spark))
 
     if os.environ.get("SASSY_BENCH_SCALING", "1") == "1":
-        _guard(out, "kernel_scaling", phase_kernel_scaling)
-    if os.environ.get("SASSY_BENCH_SPARK_SCALING", "1") == "1":
-        _guard(out, "spark_scaling", phase_spark_scaling)
+        from scaling import measure
+
+        block = out.setdefault("scaling", {})
+        _guard(out, "scaling", lambda: measure(CPUS, ER_PAGES, out=block))
 
 
 def _die_printably(signum, frame):  # noqa: ARG001 — signal signature
     """SIGTERM -> SystemExit so main()'s finally still emits the JSON
     accumulated so far. A supervisor that soft-kills a long run (e.g.
-    during the scaling phases) then still gets every completed block;
+    during the scaling phase) then still gets every completed block;
     only SIGKILL can lose the record."""
     raise SystemExit(143)
 

@@ -257,6 +257,11 @@ def connected_components(
     path runs untouched; no extra action is ever spent to learn the
     size. 100k edges collect to ~tens of MB — driver-safe. Set 0 to
     disable (tests pin label equality between both paths).
+
+    Raises ``RuntimeError`` naming the iterations run and ``max_iter``
+    when the star rounds stop at ``max_iter`` before converging, instead
+    of returning partial labels. Iterations already checkpointed stay,
+    so a rerun with a larger ``max_iter`` resumes from them.
     """
     if encode_ids:
         orig = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -396,6 +401,7 @@ def connected_components(
         if small_graph_threshold and n_in <= small_graph_threshold:
             return finish_small(e, 0)
 
+    converged = False
     for it in range(start_iter, max_iter):
         # ONE job per iteration: the convergence state (count + content
         # hash) rides on the materialization job as an Observation instead
@@ -439,6 +445,12 @@ def connected_components(
 
     if e_in_cached is not None:
         e_in_cached.unpersist()
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge: "
+            f"{max(max_iter - start_iter, 0)} iterations run from iteration "
+            f"{start_iter}, max_iter={max_iter}"
+        )
     return _labels_from_stars(e, orig, src)
 
 

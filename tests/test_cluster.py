@@ -57,6 +57,18 @@ def test_cc_long_chain(spark):
     assert len(got) == n
 
 
+def test_cc_unconverged_raises(spark):
+    """Stopping at max_iter before convergence is an error, not partial
+    labels (one star round leaves a 64-node path in many pieces)."""
+    edges = [(f"p{i:02d}", f"p{i+1:02d}") for i in range(63)]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    with pytest.raises(RuntimeError, match="1 iterations run .* max_iter=1"):
+        connected_components(df, max_iter=1, small_graph_threshold=0)
+    got = connected_components(df).collect()
+    assert {r["cluster_id"] for r in got} == {"p00"}
+    assert len(got) == 64
+
+
 def test_cc_checkpoint_resume(spark, tmp_path):
     nodes, edges = _random_graph(9)
     df = spark.createDataFrame(edges, ["src", "dst"])
@@ -99,12 +111,12 @@ def test_cc_resume_mid_run(spark, tmp_path):
     # threshold=0 pins the DISTRIBUTED star-iteration mechanics (the
     # driver union-find finisher would otherwise converge instantly on
     # this driver-sized graph)
-    partial = connected_components(
-        df, checkpoint_dir=ck, max_iter=2, small_graph_threshold=0
-    )
-    # chain of 96 cannot converge in 2 star rounds
-    labels_partial = {r["url"]: r["cluster_id"] for r in partial.collect()}
-    assert len(set(labels_partial.values())) > 1
+    # chain of 96 cannot converge in 2 star rounds: the call raises, and
+    # the two iterations it ran stay checkpointed
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(
+            df, checkpoint_dir=ck, max_iter=2, small_graph_threshold=0
+        )
     resumed = connected_components(
         df, checkpoint_dir=ck, max_iter=25, small_graph_threshold=0
     )

@@ -1,174 +1,129 @@
-"""Scaling-efficiency evidence for the north rule.
+"""N-vs-4N throughput scaling of the ER ``link()`` job on this machine.
 
-No real cluster exists in this sandbox, so the two-cluster-size criterion
-(N vs 4N executors, efficiency >= 0.8) is evidenced by running the SAME
-job at local[8] and local[32] on the SAME deterministic input and
-comparing candidate-pairs-scored/sec. Appends a markdown report to
-BENCH/BASELINE.md and prints one JSON line.
+BASELINE's north rule compares throughput at N and 4N executors; here
+lo = cores // 4 and hi = 4 * lo local cores (local[1] vs local[4] on 4
+cores, local[8] vs local[32] on 32). Below 4 cores the block reports
+``not_measurable`` and runs nothing. Each rep runs one fresh child per
+side, in alternating order; the child builds the seeded pages (untimed),
+runs ``link(pages, k=None, k_frac=0.05).count()`` once to warm up and
+once timed, and prints pairs/s. A rep whose sides count different pairs
+is an error, not a sample. Reported: every sample, both medians,
+``efficiency = median_hi / (4 * median_lo)`` and the wall; no gate.
 
-Run: python tools/scaling.py [n_pages]
+Run: python tools/scaling.py [n_pages]    (prints one JSON line)
 """
 
 from __future__ import annotations
 
 import json
+import os
+import signal
+import statistics
 import subprocess
 import sys
 import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-
-RUNNER = r"""
-import sys, time, json
-sys.path.insert(0, {repo!r})
-from sassy_spark import build_spark
-from sassy_spark.sources.pages import generate_pages
-from sassy_spark.operators import linkage
-
-cores = {cores}
-spark = build_spark(app_name=f"scaling_{cores}", cores=cores)
-pages = generate_pages(spark, {n_pages}, seed={seed}).drop("cluster_id").persist()
-n_pages = pages.count()
-t0 = time.time()
-scored = linkage.link(pages, k=None, k_frac=0.05)
-n_pairs = scored.count()
-dt = time.time() - t0
-print("RESULT " + json.dumps({{
-    "cores": cores, "pages": n_pages, "pairs": n_pairs,
-    "sec": round(dt, 2), "pairs_per_sec": round(n_pairs / dt, 1),
-}}))
-spark.stop()
-"""
+REPS = 3
+CHILD_TIMEOUT_SEC = 600
 
 
-def _popen(
-    cores: int,
-    n_pages: int,
-    seed: int = 42,
-    mem: str | None = None,
-    cpuset: str | None = None,
-) -> subprocess.Popen:
-    import os
+def lo_hi(cores: int) -> tuple[int, int] | None:
+    lo = cores // 4
+    return (lo, 4 * lo) if lo >= 1 else None
 
-    code = RUNNER.format(repo=str(REPO), cores=cores, n_pages=n_pages, seed=seed)
-    env = dict(os.environ)
-    if mem:
-        env["SASSY_DRIVER_MEM"] = mem
-    cmd = [sys.executable, "-c", code]
-    if cpuset:
-        # dedicated cores per executor JVM — what a real cluster manager
-        # (YARN/K8s cpuset) provides; without it co-resident JVMs bounce
-        # threads across every core and trash each other's caches
-        cmd = ["taskset", "-c", cpuset] + cmd
-    return subprocess.Popen(
-        cmd,
+
+def _child(cores: int, n_pages: int) -> None:
+    sys.path.insert(0, str(REPO))
+    from sassy_spark import build_spark
+    from sassy_spark.operators import linkage
+    from sassy_spark.sources.pages import generate_pages
+
+    spark = build_spark(app_name=f"scaling_{cores}", cores=cores)
+    pages = generate_pages(spark, n_pages, seed=42).drop("cluster_id").persist()
+    pages.count()
+    linkage.link(pages, k=None, k_frac=0.05).count()  # warm-up
+    t0 = time.perf_counter()
+    pairs = linkage.link(pages, k=None, k_frac=0.05).count()
+    sec = time.perf_counter() - t0
+    print("RESULT " + json.dumps({"pairs": pairs, "pairs_per_sec": pairs / sec}))
+    spark.stop()
+
+
+def _end_group(p: subprocess.Popen) -> None:
+    """End a child that is still running, with its JVM and Python workers
+    (they share its process group): SIGTERM, so the JVM's shutdown hooks
+    delete its scratch dirs, then SIGKILL after 30 s."""
+    os.killpg(p.pid, signal.SIGTERM)
+    try:
+        p.communicate(timeout=30)
+    except subprocess.TimeoutExpired:
+        os.killpg(p.pid, signal.SIGKILL)
+        p.communicate()
+
+
+def _side(cores: int, n_pages: int) -> dict:
+    p = subprocess.Popen(
+        [sys.executable, __file__, "--child", str(cores), str(n_pages)],
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,
         text=True,
-        cwd=str(REPO),
-        env=env,
+        cwd=REPO,
+        start_new_session=True,
     )
-
-
-def _result(p: subprocess.Popen) -> dict:
-    out, _ = p.communicate(timeout=1800)
+    try:
+        # stdout closes when the child's JVM has exited too
+        out, _ = p.communicate(timeout=CHILD_TIMEOUT_SEC)
+    finally:
+        if p.poll() is None:  # timed out or interrupted
+            _end_group(p)
     for line in out.splitlines():
         if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT "):])
-    raise RuntimeError(f"no RESULT in output:\n{out[-2000:]}")
+            return json.loads(line[len("RESULT ") :])
+    raise RuntimeError(f"local[{cores}] child exited {p.returncode}, no result")
 
 
-def run(cores: int, n_pages: int, seed: int = 42) -> dict:
-    return _result(_popen(cores, n_pages, seed))
-
-
-def run_executor_model(n_execs: int, cores_each: int, n_pages: int) -> dict:
-    """N vs 4N *executors*: n_execs concurrent local[cores_each] JVMs, each
-    an independent 'executor' working its own shard (distinct seeds).
-    Aggregate pairs/sec over the slowest-exec wall — the honest model of
-    adding executor hosts that share nothing but this node's DRAM."""
+def measure(cores: int, n_pages: int, out: dict | None = None) -> dict:
+    """Fill ``out`` (and return it) rep by rep, so an interrupted run
+    keeps the samples it has."""
+    out = {} if out is None else out
+    sides = lo_hi(cores)
+    if sides is None:
+        out["not_measurable"] = f"{cores} cores: N-vs-4N needs at least 4"
+        return out
+    lo, hi = sides
+    samples = {lo: [], hi: []}
+    out.update(lo_cores=lo, hi_cores=hi, n_pages=n_pages, pairs=None)
+    out.update(samples_lo=samples[lo], samples_hi=samples[hi])
     t0 = time.time()
-    procs = [
-        _popen(
-            cores_each,
-            n_pages,
-            seed=100 + i,
-            mem="12g",
-            cpuset=f"{i * cores_each}-{(i + 1) * cores_each - 1}",
-        )
-        for i in range(n_execs)
-    ]
-    results = [_result(p) for p in procs]
-    wall = time.time() - t0
-    pairs = sum(r["pairs"] for r in results)
-    return {
-        "n_execs": n_execs,
-        "cores_each": cores_each,
-        "pairs": pairs,
-        "sec": round(wall, 2),
-        "per_exec_sec": [r["sec"] for r in results],
-        "pairs_per_sec": round(pairs / wall, 1),
-    }
-
-
-def main() -> None:
-    n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    mode = sys.argv[2] if len(sys.argv) > 2 else "both"
-    report: dict = {"n_pages": n_pages}
-    if mode in ("both", "threads"):
-        r8 = run(8, n_pages)
-        r32 = run(32, n_pages)
-        eff = (r32["pairs_per_sec"] / r8["pairs_per_sec"]) / 4.0
-        report.update(
-            local8=r8, local32=r32, scaling_efficiency_8_to_32=round(eff, 3)
-        )
-    if mode in ("both", "executors"):
-        e1 = run_executor_model(1, 8, n_pages)
-        e4 = run_executor_model(4, 8, n_pages)
-        eff_e = (e4["pairs_per_sec"] / e1["pairs_per_sec"]) / 4.0
-        report.update(
-            exec_1x8=e1,
-            exec_4x8=e4,
-            scaling_efficiency_executors=round(eff_e, 3),
-        )
-    print(json.dumps(report))
-    bench_dir = REPO / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
-    stamp = time.strftime("%Y-%m-%d %H:%M:%S")
-    lines = [
-        f"\n## Scaling run {stamp}\n",
-        f"Job: `linkage.link` (blocking + candidate pairs + banded Myers "
-        f"scoring), k_frac=0.05, deterministic synthetic input "
-        f"(~{n_pages} pages/run).\n",
-    ]
-    if "local8" in report:
-        r8, r32 = report["local8"], report["local32"]
-        lines += [
-            "Thread-scaling (one JVM, local[8] vs local[32], same input):\n",
-            "| parallelism | pairs scored | wall sec | pairs/sec |",
-            "|---|---|---|---|",
-            f"| local[8]  | {r8['pairs']} | {r8['sec']} | {r8['pairs_per_sec']} |",
-            f"| local[32] | {r32['pairs']} | {r32['sec']} | {r32['pairs_per_sec']} |",
-            f"\nThread-scaling efficiency 8 -> 32: "
-            f"**{report['scaling_efficiency_8_to_32']:.3f}**\n",
-        ]
-    if "exec_1x8" in report:
-        e1, e4 = report["exec_1x8"], report["exec_4x8"]
-        lines += [
-            "Executor-model scaling (N vs 4N executors: 1 vs 4 concurrent "
-            "local[8] JVMs, each on its own shard — the cluster analog; "
-            "executors share only this node's DRAM):\n",
-            "| executors | pairs scored (total) | wall sec | aggregate pairs/sec |",
-            "|---|---|---|---|",
-            f"| 1 x local[8] | {e1['pairs']} | {e1['sec']} | {e1['pairs_per_sec']} |",
-            f"| 4 x local[8] | {e4['pairs']} | {e4['sec']} | {e4['pairs_per_sec']} |",
-            f"\n**Executor scaling efficiency N -> 4N: "
-            f"{report['scaling_efficiency_executors']:.3f}** (target >= 0.8).\n",
-        ]
-    with open(bench_dir / "BASELINE.md", "a") as f:
-        f.write("\n".join(lines) + "\n")
+    try:
+        for rep in range(REPS):
+            order = (lo, hi) if rep % 2 == 0 else (hi, lo)
+            try:
+                res = {c: _side(c, n_pages) for c in order}
+                if res[lo]["pairs"] != res[hi]["pairs"]:
+                    raise RuntimeError(
+                        f"local[{lo}] counted {res[lo]['pairs']} pairs, "
+                        f"local[{hi}] {res[hi]['pairs']}"
+                    )
+            except (RuntimeError, subprocess.TimeoutExpired) as exc:
+                out.setdefault("errors", []).append(f"rep {rep}: {exc}"[:300])
+                continue
+            out["pairs"] = res[lo]["pairs"]
+            for c in order:
+                samples[c].append(round(res[c]["pairs_per_sec"], 1))
+            out["median_lo"] = statistics.median(samples[lo])
+            out["median_hi"] = statistics.median(samples[hi])
+            out["efficiency"] = round(out["median_hi"] / (4 * out["median_lo"]), 3)
+    finally:
+        out["wall_sec"] = round(time.time() - t0, 1)
+    return out
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--child"]:
+        _child(int(sys.argv[2]), int(sys.argv[3]))
+    else:
+        n = int(sys.argv[1]) if len(sys.argv) > 1 else 12000
+        print(json.dumps(measure(len(os.sched_getaffinity(0)), n)))
