@@ -21,6 +21,7 @@ the process exits 0.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -29,6 +30,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 sys.path.insert(0, str(Path(__file__).resolve().parent / "tools"))
+# probes: the benchmark's process-tree helpers, reused for the shutdown
+sys.path.insert(0, str(Path(__file__).resolve().parent / "perfbench"))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
@@ -88,23 +91,52 @@ def _guard(out: dict, phase: str, fn) -> None:
 
 
 def _end_jvm(spark) -> None:
-    """Stop Spark and end its JVM (it exits when its stdin closes), so
-    the scaling phase's child sessions have the machine to themselves."""
+    """Stop Spark, end its JVM (it exits when its stdin closes) and wait
+    for every process that was below this one (JVM, Python worker daemon
+    and workers), killing any left after 30 s, so none outlives the
+    bench and the scaling phase's child sessions have the machine to
+    themselves. SIGTERM is ignored until the shutdown is done."""
+    import signal
+
+    from probes import descendants, wait_gone
     from pyspark import SparkContext
 
-    spark.stop()
-    jvm = SparkContext._gateway.proc
-    jvm.stdin.close()
-    jvm.wait(timeout=60)
+    prev = signal.signal(signal.SIGTERM, signal.SIG_IGN)
+    try:
+        procs = descendants(os.getpid())
+        try:
+            spark.stop()
+        finally:
+            jvm = SparkContext._gateway.proc
+            jvm.stdin.close()
+            jvm.wait(timeout=60)
+            for pid in wait_gone(procs, timeout=30):
+                with contextlib.suppress(OSError):
+                    os.kill(pid, signal.SIGKILL)
+    finally:
+        signal.signal(signal.SIGTERM, prev)
 
 
 def _run(out: dict) -> None:
-    import __spark_entry__ as E
     from sassy_spark import build_spark
-    from sassy_spark.operators import linkage
-    from sassy_spark.sources.pages import generate_pages
 
     spark = build_spark(app_name="sassy_bench", cores=CPUS)
+    try:
+        _phases(out, spark)
+    finally:
+        # also on SIGTERM (SystemExit), which skips the scaling phase
+        _guard(out, "spark_stop", lambda: _end_jvm(spark))
+    if os.environ.get("SASSY_BENCH_SCALING", "1") == "1":
+        from scaling import measure
+
+        block = out.setdefault("scaling", {})
+        _guard(out, "scaling", lambda: measure(CPUS, ER_PAGES, out=block))
+
+
+def _phases(out: dict, spark) -> None:
+    import __spark_entry__ as E
+    from sassy_spark.operators import linkage
+    from sassy_spark.sources.pages import generate_pages
 
     def phase_queries() -> None:
         qs = E.queries()
@@ -209,13 +241,6 @@ def _run(out: dict) -> None:
         _guard(out, "f1", phase_f1)
     if os.environ.get("SASSY_BENCH_ORACLE_SUITE", "1") == "1":
         _guard(out, "oracle_suite", phase_oracle_suite)
-    _guard(out, "spark_stop", lambda: _end_jvm(spark))
-
-    if os.environ.get("SASSY_BENCH_SCALING", "1") == "1":
-        from scaling import measure
-
-        block = out.setdefault("scaling", {})
-        _guard(out, "scaling", lambda: measure(CPUS, ER_PAGES, out=block))
 
 
 def _die_printably(signum, frame):  # noqa: ARG001 — signal signature

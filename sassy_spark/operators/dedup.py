@@ -12,7 +12,7 @@ reference's hierarchical prefilter (src/pattern_tiling/general.rs:60-102).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (
@@ -60,6 +60,67 @@ def dedup_exact_keep_first(
 # ----------------------------------------------------------------- minhash
 
 
+def minhash_sketch(
+    src: DataFrame, n_hashes: int = 128, ngram: int = 5, seed: int = 42
+) -> DataFrame:
+    """The one minhash sketch UDF. ``src`` holds ``_norm`` (normalized
+    text) plus the columns to keep; the output is those columns plus
+    ``sig array<bigint>``: one-permutation minhash signatures over char
+    n-grams of ``_norm``, one Arrow pass per batch (prefix-sum shingle
+    hashing + one scatter for the whole batch). Rows whose ``_norm`` is
+    empty or null are dropped. Deterministic (seeded), so band keys
+    derived from it are stable across runs and checkpoints."""
+    from typing import Iterator
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    from ..functions.hashing import oph_signatures_batch, shingle_hashes_batch
+
+    seed_mix = np.uint64(seed * 0x9E3779B97F4A7C15 % (1 << 63))
+    schema = src.drop("_norm").schema.add("sig", T.ArrayType(T.LongType()))
+
+    def sketch_batches(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            norm = batch.column("_norm")
+            idx = np.flatnonzero(
+                pc.fill_null(pc.utf8_length(norm), 0).to_numpy() > 0
+            )
+            if len(idx) == 0:
+                continue
+            h_all, doc_idx, _ = shingle_hashes_batch(
+                norm.take(idx).to_pylist(), ngram
+            )
+            h_all ^= seed_mix
+            sigs = oph_signatures_batch(h_all, doc_idx, len(idx), n_hashes)
+            offsets = np.arange(0, sigs.size + 1, n_hashes, dtype=np.int32)
+            sig = pa.ListArray.from_arrays(
+                offsets, pa.array(sigs.view(np.int64).ravel())
+            )
+            cols = [batch.column(n).take(idx) for n in schema.names[:-1]]
+            yield pa.RecordBatch.from_arrays(cols + [sig], names=schema.names)
+
+    return src.mapInArrow(sketch_batches, schema)
+
+
+def band_keys(sig, n_hashes: int = 128, bands: int = 16) -> Column:
+    """``array<bigint>`` of the ``bands`` LSH band keys of a minhash
+    signature column: band ``bi`` is ``xxhash64(bi, its n_hashes/bands
+    slice of sig)``. Two signatures share a key iff all rows of that band
+    agree — the classic LSH S-curve."""
+    rows_per_band = n_hashes // bands
+    return F.array(*[
+        F.xxhash64(
+            F.lit(bi), F.slice(sig, bi * rows_per_band + 1, rows_per_band)
+        )
+        for bi in range(bands)
+    ])
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -68,49 +129,20 @@ def minhash_signatures(
     ngram: int = 5,
     seed: int = 42,
 ) -> DataFrame:
-    """(id, sig array<bigint>): one-permutation minhash signatures over
-    normalized char n-grams — one Arrow pass per batch (prefix-sum shingle
-    hashing + one scatter for the whole batch; same sketch family as
-    linkage.minhash_band_keys, so the band keys derived from these
-    signatures gate the same pairs)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.hashing import oph_signatures_batch, shingle_hashes_batch
-
-    seed_mix = np.uint64(seed * 0x9E3779B97F4A7C15 % (1 << 63))
-
-    def sig_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep = pdf["_norm"].astype(bool)
-            ids_in = pdf["id"][keep].to_numpy()
-            texts_in = pdf["_norm"][keep].tolist()
-            n_docs = len(texts_in)
-            if n_docs == 0:
-                yield pd.DataFrame({"id": [], "sig": []})
-                continue
-            h_all, doc_idx, _ = shingle_hashes_batch(texts_in, ngram)
-            h_all ^= seed_mix
-            sigs = oph_signatures_batch(h_all, doc_idx, n_docs, n_hashes)
-            yield pd.DataFrame(
-                {"id": ids_in, "sig": list(sigs.astype(np.int64))}
-            )
-
+    """(id, sig array<bigint>): :func:`minhash_sketch` over normalized
+    ``text_col``, keyed by ``id_col`` (its type kept) — the sketch
+    linkage uses, so :func:`band_keys` of these signatures gate the same
+    pairs."""
     from .linkage import _fan_out_small_input
 
-    id_type = df.schema[id_col].dataType.simpleString()
     src = df.select(
-        F.col(id_col).cast("string").alias("id"),
-        normalize(F.col(text_col)).alias("_norm"),
+        F.col(id_col).alias("id"), normalize(F.col(text_col)).alias("_norm")
     )
     # the sketch UDF is the CPU-bound stage: never let a few-file scan
     # serialize it onto a handful of tasks (q20 at sf0.1 arrives as ONE
     # parquet file -> one task -> 17s single-threaded vs 2s fanned out)
     src = _fan_out_small_input(src, "id")
-    out = src.mapInPandas(sig_batch, schema="id string, sig array<bigint>")
-    return out.select(F.col("id").cast(id_type).alias("id"), "sig")
+    return minhash_sketch(src, n_hashes=n_hashes, ngram=ngram, seed=seed)
 
 
 def minhash_lsh_candidates(
@@ -145,7 +177,6 @@ def minhash_lsh_candidates(
     from .linkage import block_pairs, broadcast_fits
     from .staging import stage_parquet
 
-    rows_per_band = n_hashes // bands
     sigs = minhash_signatures(
         df, id_col=id_col, text_col=text_col, n_hashes=n_hashes,
         ngram=ngram, seed=seed,
@@ -171,16 +202,10 @@ def minhash_lsh_candidates(
     sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     if not sigs_small:
         sigs.count()
-    band_cols = [
-        F.xxhash64(
-            F.lit(bi), F.slice("sig", bi * rows_per_band + 1, rows_per_band)
-        )
-        for bi in range(bands)
-    ]
-    band_keys = sigs.select(
-        "id", F.explode(F.array(*band_cols)).alias("bucket")
+    keys = sigs.select(
+        "id", F.explode(band_keys("sig", n_hashes, bands)).alias("bucket")
     )
-    groups = band_keys.groupBy("bucket").agg(
+    groups = keys.groupBy("bucket").agg(
         F.collect_list("id").alias("ids")
     ).where(F.size("ids") <= max_block_size)
     cand = block_pairs(groups, "ids").select(
@@ -319,14 +344,6 @@ def incremental_minhash_pairs(
 
     from .staging import stage_parquet
 
-    rows_per_band = n_hashes // bands
-    band_cols = [
-        F.xxhash64(
-            F.lit(bi), F.slice("sig", bi * rows_per_band + 1, rows_per_band)
-        )
-        for bi in range(bands)
-    ]
-
     # one sketch pass per side; persisted because each side feeds its
     # bucket table AND (optionally) the estimate pre-filter joins
     sigs_n = minhash_signatures(
@@ -340,7 +357,7 @@ def incremental_minhash_pairs(
 
     def _bucket_lists(sigs: DataFrame, out: str) -> DataFrame:
         keys = sigs.select(
-            "id", F.explode(F.array(*band_cols)).alias("bucket")
+            "id", F.explode(band_keys("sig", n_hashes, bands)).alias("bucket")
         )
         return keys.groupBy("bucket").agg(
             F.collect_list("id").alias(out)

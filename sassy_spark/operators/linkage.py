@@ -29,10 +29,9 @@ from __future__ import annotations
 
 import functools
 import logging
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -122,14 +121,16 @@ def block_pairs(
 def host_block_keys(
     pages: DataFrame, url: str = "url", len_of: str | None = None
 ) -> DataFrame:
-    """(url, block_key) from the URL host — the cheap structural block.
+    """(url, block_key) from the URL host — the cheap structural block,
+    keyed as ``xxhash64("host", host)`` so it shares the bigint type of
+    the band keys.
 
     ``len_of``: name of a text column whose length should ride along as
     ``_l`` for candidate_pairs' length prefilter (computed in the same
     scan that reads the url anyway)."""
     cols = [
         F.col(url).alias("url"),
-        F.concat(F.lit("host:"), url_host(F.col(url))).alias("block_key"),
+        F.xxhash64(F.lit("host"), url_host(F.col(url))).alias("block_key"),
     ]
     if len_of is not None:
         cols.append(F.length(F.col(len_of)).cast("long").alias("_l"))
@@ -146,109 +147,52 @@ def minhash_band_keys(
     seed: int = 42,
     with_len: bool = False,
 ) -> DataFrame:
-    """(url, block_key) LSH band keys: minhash signature split into
-    ``bands`` bands of n_hashes/bands rows; band key = hash(band index +
-    band slice). Two docs share a band key iff all rows in that band
-    agree — the classic LSH S-curve. Deterministic across runs (seeded
-    permutations) so checkpoints are resumable.
+    """(url, block_key) LSH band keys: :func:`dedup.band_keys` of the
+    :func:`dedup.minhash_sketch` signature, one bigint key per band.
+    Deterministic across runs (seeded) so checkpoints are resumable.
 
     ``with_len=True`` adds a ``_l`` column (codepoint length of the RAW
     text, computed JVM-side and passed through the sketch UDF) so
     candidate_pairs can push the |len_a-len_b| prefilter without a
     separate length join."""
-    rows_per_band = n_hashes // bands
-    from ..functions.hashing import (
-        _splitmix64,
-        oph_signatures_batch,
-        shingle_hashes_batch,
-    )
-
-    seed_mix = np.uint64(seed * 0x9E3779B97F4A7C15 % (1 << 63))
-
-    # one Python pass computes signatures AND band keys for the WHOLE
-    # Arrow batch (expressing the bands as Catalyst transform() over a UDF
-    # column re-evaluates the UDF per band — measured 60x; and per-doc
-    # numpy calls cost ~12 dispatches/doc — the batch forms do one
-    # prefix-sum pass + one scatter for all documents). Signatures use
-    # one-permutation hashing + rotation densification: O(shingles)
-    # instead of O(shingles x n_hashes) — 15x cheaper than the classic
-    # k-permutation minhash at equal band sensitivity.
-    def bandify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep = pdf["_norm"].astype(bool)
-            urls_in = pdf["url"][keep].to_numpy()
-            texts_in = pdf["_norm"][keep].tolist()
-            lens_in = (
-                pdf["_l"][keep].to_numpy() if with_len else None
-            )
-            n_docs = len(texts_in)
-            if n_docs == 0:
-                empty = {"url": [], "block_key": []}
-                if with_len:
-                    empty["_l"] = []
-                yield pd.DataFrame(empty)
-                continue
-            h_all, doc_idx, _ = shingle_hashes_batch(texts_in, ngram)
-            h_all ^= seed_mix
-            sigs = oph_signatures_batch(h_all, doc_idx, n_docs, n_hashes)
-            bands_m = sigs.reshape(n_docs, bands, rows_per_band)
-            # order-dependent band hash: mix each row then combine
-            bh = bands_m[:, :, 0]
-            for c in range(1, rows_per_band):
-                bh = _splitmix64(bh ^ bands_m[:, :, c])
-            urls = np.repeat(urls_in, bands)
-            bidx = np.tile(np.arange(bands), n_docs)
-            keys_out = [
-                f"band:{i}:{v:016x}"
-                for i, v in zip(bidx.tolist(), bh.ravel().tolist())
-            ]
-            res = {"url": urls, "block_key": keys_out}
-            if with_len:
-                res["_l"] = np.repeat(lens_in, bands)
-            yield pd.DataFrame(res)
+    from .dedup import band_keys, minhash_sketch
 
     cols = [F.col(url).alias("url"), normalize(F.col(text_col)).alias("_norm")]
-    schema = "url string, block_key string"
     if with_len:
-        cols.append(F.length(F.col(text_col)).alias("_l"))
-        schema += ", _l long"
-    src = pages.select(*cols)
-    src = _fan_out_small_input(src, "url")
-    return src.mapInPandas(bandify, schema=schema)
+        cols.append(F.length(F.col(text_col)).cast("long").alias("_l"))
+    src = _fan_out_small_input(pages.select(*cols), "url")
+    sigs = minhash_sketch(src, n_hashes=n_hashes, ngram=ngram, seed=seed)
+    return sigs.select(
+        "url",
+        F.explode(band_keys("sig", n_hashes, bands)).alias("block_key"),
+        *(["_l"] if with_len else []),
+    )
 
 
 def blocking_keys(
     pages: DataFrame,
     text_col: str = "text",
-    use_host: bool = True,
-    use_minhash: bool = True,
     n_hashes: int = 128,
     bands: int = 16,
     ngram: int = 5,
     seed: int = 42,
     with_len: bool = False,
 ) -> DataFrame:
-    parts = []
-    if use_host:
-        parts.append(
-            host_block_keys(pages, len_of=text_col if with_len else None)
+    """(url, block_key bigint[, _l]): every page's host key and its
+    ``bands`` minhash band keys."""
+    return host_block_keys(
+        pages, len_of=text_col if with_len else None
+    ).unionByName(
+        minhash_band_keys(
+            pages,
+            text_col,
+            n_hashes=n_hashes,
+            bands=bands,
+            ngram=ngram,
+            seed=seed,
+            with_len=with_len,
         )
-    if use_minhash:
-        parts.append(
-            minhash_band_keys(
-                pages,
-                text_col,
-                n_hashes=n_hashes,
-                bands=bands,
-                ngram=ngram,
-                seed=seed,
-                with_len=with_len,
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    )
 
 
 # --------------------------------------------------------------- stage 1.5

@@ -20,7 +20,9 @@ def build_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     # The scoring kernel allocates/frees multi-MB numpy arrays per batch;
     # with default glibc thresholds those are mmap'd and munmap'd, and the
     # resulting TLB-shootdown IPIs serialize all 32 workers (measured 4x
@@ -30,13 +32,10 @@ def build_spark(
     # Rule of thumb: ~2 shuffle tasks per core locally; on a real cluster
     # AQE coalesces anyway, so this is a starting hint, not a commitment.
     shuffle_partitions = shuffle_partitions or max(cores * 2, 8)
-    # Shuffle/spill target: the sandbox disk writes ~100 MB/s and
-    # serializes every core behind it (8- and 32-core runs measured the
-    # same wall time). RAM-backed local dir restores compute scaling; on a
-    # real cluster this is per-executor NVMe instead.
+    # shuffle/spill dir: SASSY_LOCAL_DIR, else Spark's own default
+    # (SPARK_LOCAL_DIRS, else java.io.tmpdir) — never RAM by default, so a
+    # killed session leaves no block files in memory
     local_dir = os.environ.get("SASSY_LOCAL_DIR")
-    if local_dir is None:
-        local_dir = "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else None
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)

@@ -136,7 +136,7 @@ def streaming_candidate_pairs(
 
     pairs = keys.groupBy("block_key").applyInPandasWithState(
         emit,
-        outputStructType="url_a string, url_b string, block_key string",
+        outputStructType="url_a string, url_b string, block_key bigint",
         stateStructType="urls array<string>",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

@@ -66,10 +66,12 @@ def test_scaling_lo_hi_choice(cores, sides):
     assert lo_hi(cores) == sides
 
 
-def test_bench_json_survives_sigterm():
+def test_bench_json_survives_sigterm(tmp_path):
     """A supervisor soft-kill (SIGTERM) mid-run must still yield one
     parseable JSON line and rc=0 — completed blocks survive, the
-    truncation is recorded under errors.terminated."""
+    truncation is recorded under errors.terminated — and the bench's
+    Spark session (JVM, Python worker daemon and workers) must be gone
+    by the time it exits."""
     import signal
     import time
 
@@ -84,17 +86,35 @@ def test_bench_json_survives_sigterm():
             "SASSY_BENCH_SCALING": "0",
         }
     )
-    proc = subprocess.Popen(
-        [sys.executable, "bench.py"],
-        cwd=REPO,
-        env=env,
-        stdout=subprocess.PIPE,
-        stderr=subprocess.DEVNULL,
-        text=True,
-    )
-    time.sleep(20)  # inside the queries phase (JVM up, work running)
-    proc.send_signal(signal.SIGTERM)
-    out, _ = proc.communicate(timeout=120)
+    # stdout to a file, not a pipe: the JVM inherits it, and a pipe's
+    # EOF would wait for the JVM too, hiding one that outlives the bench
+    out_path = tmp_path / "bench.out"
+    with open(out_path, "w") as out_f:
+        proc = subprocess.Popen(
+            [sys.executable, "bench.py"],
+            cwd=REPO,
+            env=env,
+            stdout=out_f,
+            stderr=subprocess.DEVNULL,
+            start_new_session=True,
+        )
+        time.sleep(20)  # inside the queries phase (JVM up, work running)
+        proc.send_signal(signal.SIGTERM)
+        proc.wait(timeout=120)
+    out = out_path.read_text()
+    # every process the bench started is in its session; a zombie
+    # (ended, not yet reaped by its new parent) does not run
+    left = []
+    for entry in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        fields = stat[stat.rfind(")") + 2:].split()
+        if int(fields[3]) == proc.pid and fields[0] != "Z":
+            left.append(stat[: stat.rfind(")") + 1])
+    assert not left, left
     assert proc.returncode == 0, f"rc={proc.returncode}"
     lines = [ln for ln in out.strip().splitlines() if ln.startswith("{")]
     assert len(lines) == 1, out

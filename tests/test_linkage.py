@@ -20,6 +20,8 @@ def scored(pages):
 def test_blocking_keys_shape(pages):
     keys = linkage.blocking_keys(pages.drop("cluster_id"))
     assert keys.columns == ["url", "block_key"]
+    # host and band keys are one type: 64-bit hashes
+    assert keys.schema["block_key"].dataType.simpleString() == "bigint"
     n_pages = pages.count()
     # every page gets exactly 1 host key + 16 band keys
     assert keys.count() == n_pages * 17
@@ -97,14 +99,66 @@ def test_length_prefilter_is_pushed(pages):
     pairs = linkage.candidate_pairs(keys)
     scored = linkage.score_pairs(pairs, inp, k=5)
     plan = scored._jdf.queryExecution().executedPlan().toString()
-    # the scoring stage is the Arrow-native node (MapInArrow), not the
-    # pandas one (the blocking stage's bandify UDF is still MapInPandas)
+    # the scoring stage is the plan's one Arrow-native node (host keys
+    # only: no sketch UDF runs here)
     udf_pos = plan.find("MapInArrow")
     filt_pos = plan.find("Filter")
     assert udf_pos != -1 and filt_pos != -1
     # physical plans print top-down: the UDF node must appear ABOVE (before
     # in string order) the length filter it consumes from
     assert udf_pos < filt_pos, plan[:2000]
+
+
+def test_candidate_pairs_equal_band_tuple_oracle(spark):
+    """The blocks are defined by host equality and by equality of whole
+    minhash bands, whatever the key hashes them to: the pair set of the
+    bigint-keyed pipeline equals a plain-Python oracle that blocks on
+    host strings and on band tuples of minhash_signatures."""
+    import itertools
+    import math
+    from collections import defaultdict
+
+    from sassy_spark.functions.text import url_host
+    from sassy_spark.operators import dedup
+    from sassy_spark.sources.pages import generate_pages
+
+    pages = generate_pages(spark, 300, seed=3).drop("cluster_id").cache()
+    got = {
+        tuple(r)
+        for r in linkage.candidate_pairs(
+            linkage.blocking_keys(pages, "text", with_len=True),
+            max_block_size=10**6,
+            k_frac=0.05,
+        ).collect()
+    }
+
+    rows = pages.select(
+        "url", url_host(F.col("url")).alias("host"), F.length("text")
+    ).collect()
+    length = {r[0]: r[2] for r in rows}
+    blocks = defaultdict(set)
+    for url, host, _ in rows:
+        blocks[("host", host)].add(url)
+    sigs = dedup.minhash_signatures(pages, id_col="url").collect()
+    for url, sig in sigs:
+        for b in range(16):
+            blocks[("band", b, tuple(sig[b * 8:(b + 1) * 8]))].add(url)
+
+    def oracle(kinds):
+        out = set()
+        for key, members in blocks.items():
+            if key[0] not in kinds:
+                continue
+            for a, b in itertools.combinations(sorted(members), 2):
+                la, lb = length[a], length[b]
+                if abs(la - lb) <= math.ceil(max(la, lb) * 0.05):
+                    out.add((a, b, la, lb))
+        return out
+
+    pages.unpersist()
+    assert got == oracle({"host", "band"})
+    # non-vacuous: band blocks yield pairs the host blocks do not
+    assert got > oracle({"host"})
 
 
 def test_score_pairs_nonascii_codepoint_costs(spark):

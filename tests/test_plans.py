@@ -213,9 +213,10 @@ def test_score_pairs_narrow_shuffle_shape(spark):
 
 def test_link_executed_plan_shape(spark, tmp_path):
     """Pin for the whole ER job's executed plan (``link()`` without a
-    checkpoint dir): one sketch UDF pass, one key-table exchange, one
-    pair exchange that serves both the dedup and the kernel fan-out,
-    both text attachments broadcast, one kernel stage."""
+    checkpoint dir): one sketch UDF pass (dedup's Arrow sketch), one
+    key-table exchange, one pair exchange that serves both the dedup and
+    the kernel fan-out, both text attachments broadcast, one kernel
+    stage."""
     from sassy_spark.operators.linkage import link
     from sassy_spark.sources.pages import generate_pages
 
@@ -229,8 +230,12 @@ def test_link_executed_plan_shape(spark, tmp_path):
     def count(marker):
         return sum(marker in ln for ln in lines)
 
-    assert count("MapInPandas bandify") == 1, plan
+    # the two Python stages, each by its UDF name: the sketch and the
+    # kernel (score_pairs binds _score_batches with functools.partial)
+    assert count("MapInArrow sketch_batches(") == 1, plan
+    assert count("MapInArrow partial(") == 1, plan
+    assert count("MapInArrow") == 2, plan
+    assert count("MapInPandas") == 0, plan
     assert count("Exchange hashpartitioning(block_key") == 1, plan
     assert count("REPARTITION_BY_NUM") == 1, plan
     assert count("BroadcastHashJoin") == 2, plan
-    assert count("MapInArrow") == 1, plan

@@ -1,7 +1,7 @@
 """Stage-level wall breakdown for q22 (connected components over the
 adjacent-documents chain graph) — same diagnose-before-optimizing recipe
 that cracked q20 (the sketch UDFs were riding a 1-file scan's single
-partition; see tools/profile_q20.py).
+partition).
 
 Phases timed separately, each forced with its own action:
   1. edge build  — adjacent self-join + score_pairs(k=220) + is_match

@@ -3,8 +3,9 @@
 # Usage: bash tools/run_all_checks.sh
 set -euo pipefail
 cd "$(dirname "$0")/.."
-# size every Spark session to this machine (the engine's own default is
-# 32 cores), and put Spark's scratch on disk, not in RAM-backed /dev/shm
+# size every Spark session to this machine (the engine's default already
+# is the CPUs this process may run on; the export pins it for every
+# child), and put Spark's scratch in one known place on disk
 # (SPARK_LOCAL_DIRS wins over the session's spark.local.dir)
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
