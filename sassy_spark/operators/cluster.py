@@ -8,12 +8,19 @@ iteration is two hash-join + aggregate rounds, converging in O(log n)
 iterations, which is what survives at 10^12 nodes (label propagation
 needs O(diameter)).
 
-Every iteration writes its edge set to ``{checkpoint_dir}/iter=NNN``
-(parquet) plus a ``_meta.json`` with row count, a content hash, and
-lineage (iteration number, parent). ``connected_components`` resumes
-from the latest complete checkpoint if present — the sandbox stand-in
-for Iceberg snapshot checkpointing (the Iceberg runtime jar is not in
-this environment; the snapshot/manifest discipline is the same).
+With a ``checkpoint_dir``, every iteration is a checkpoint snapshot
+(``staging.write_snapshot``) at ``{checkpoint_dir}/iter=NNN``: the edge
+set as parquet under ``data/`` plus a ``_meta.json`` written last, with
+the input fingerprint (input edge rows + content hash), the iteration's
+rows and content hash, per-partition lineage (rows and hash per
+partition) and ``iteration``/``parent``/``converged``.
+``connected_components`` resumes from the newest snapshot that
+``staging.read_snapshot`` verifies against the data on disk, in this
+process or a later one — the sandbox stand-in for Iceberg snapshot
+checkpointing (the Iceberg runtime jar is not in this environment; the
+snapshot/manifest discipline is the same). Without a checkpoint dir the
+iterations go to scratch parquet (``staging.stage_parquet``) and carry
+their convergence state on an Observation.
 
 Node ids are the url strings themselves: component representative = the
 lexicographically smallest url. Strings keep ids collision-free at any
@@ -23,11 +30,18 @@ dominates (noted trade-off).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .staging import (
+    content_state,
+    fs_list_dirs,
+    read_snapshot,
+    stage_parquet,
+    write_snapshot,
+)
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -77,119 +91,29 @@ def small_star(edges: DataFrame) -> DataFrame:
     return a.union(b).where(F.col("src") != F.col("dst")).distinct()
 
 
-def _edge_state(df: DataFrame) -> tuple[int, int]:
-    row = df.select(
-        F.count("*").alias("n"),
-        # order-insensitive content hash; bit_xor can't overflow (ANSI-safe)
-        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
-# --- checkpoint meta IO through the Hadoop FileSystem API: data and meta
-# must live on the SAME filesystem (HDFS/S3/local) or resumability breaks
-# the moment the pipeline runs off the driver's disk
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(conf), hpath, jvm
-
-
-def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
-    fs, hpath, _ = _hadoop_fs(spark, path)
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def fs_read_text(spark: SparkSession, path: str) -> str | None:
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    stream = fs.open(hpath)
-    try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        lines = []
-        line = reader.readLine()
-        while line is not None:
-            lines.append(line)
-            line = reader.readLine()
-        return "\n".join(lines)
-    finally:
-        stream.close()
-
-
-def fs_list_dirs(spark: SparkSession, path: str) -> list[str]:
-    fs, hpath, _ = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return []
-    return [
-        st.getPath().getName()
-        for st in fs.listStatus(hpath)
-        if st.isDirectory()
-    ]
+def _iter_path(checkpoint_dir: str, it: int) -> str:
+    return os.path.join(checkpoint_dir, f"iter={it:03d}")
 
 
 def _latest_checkpoint(
-    spark: SparkSession, checkpoint_dir: str
-) -> tuple[int, dict] | None:
-    if not checkpoint_dir:
-        return None
-    best = None
-    for name in fs_list_dirs(spark, checkpoint_dir):
-        if not name.startswith("iter="):
-            continue
-        raw = fs_read_text(
-            spark, os.path.join(checkpoint_dir, name, "_meta.json")
-        )
-        if raw is None:
-            continue  # incomplete write — ignore (atomicity: meta last)
-        meta = json.loads(raw)
-        it = int(meta["iteration"])
-        if best is None or it > best[0]:
-            best = (it, meta)
-    return best
-
-
-def _encode_nodes(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Order-preserving dictionary encoding url -> long.
-
-    Rank assignment via range-partition + sortWithinPartitions +
-    zipWithIndex keeps global order, so min(long) == min(url) and the
-    star algorithms produce identical clusters on 8-byte keys instead of
-    ~100-byte urls — at 10^12 nodes that is the difference between
-    shuffling 8 TB and 100 TB per iteration. One extra sort + two joins,
-    amortized over O(log n) iterations.
-    """
-    spark = edges.sparkSession
-    nodes = (
-        edges.select(F.col("src").alias("url"))
-        .union(edges.select(F.col("dst").alias("url")))
-        .distinct()
-        .repartitionByRange(F.col("url"))
-        .sortWithinPartitions("url")
+    spark: SparkSession, checkpoint_dir: str, fingerprint: dict
+) -> tuple[DataFrame, dict] | None:
+    """The newest iteration snapshot that resumes under ``fingerprint``
+    (newest first: a torn or stale newer iteration falls back to an
+    older valid one of the same input)."""
+    its = sorted(
+        (
+            int(name[len("iter="):])
+            for name in fs_list_dirs(spark, checkpoint_dir)
+            if name.startswith("iter=")
+        ),
+        reverse=True,
     )
-    rdd = nodes.rdd.map(lambda r: r[0]).zipWithIndex()
-    mapping = spark.createDataFrame(rdd, ["url", "nid"])
-    enc = (
-        edges.join(
-            mapping.select(F.col("url").alias("src"), F.col("nid").alias("s")),
-            "src",
-        )
-        .join(
-            mapping.select(F.col("url").alias("dst"), F.col("nid").alias("d")),
-            "dst",
-        )
-        .select(F.col("s").alias("src"), F.col("d").alias("dst"))
-    )
-    return enc, mapping
+    for it in its:
+        snap = read_snapshot(spark, _iter_path(checkpoint_dir, it), fingerprint)
+        if snap is not None:
+            return snap
+    return None
 
 
 def _union_find_assign(rows: list, spark: SparkSession, schema) -> DataFrame:
@@ -233,18 +157,16 @@ def connected_components(
     max_iter: int = 25,
     src: str = "src",
     dst: str = "dst",
-    encode_ids: bool = False,
     small_graph_threshold: int = 100_000,
 ) -> DataFrame:
     """edges(src,dst) -> (url, cluster_id) assignment, cluster_id = min url.
 
-    Resumable: if ``checkpoint_dir`` holds a completed iteration, work
-    restarts from it instead of the input edges.
-
-    ``encode_ids=True`` runs the star iterations on order-preserving long
-    ids (identical output labels, ~10x narrower shuffles) — the scale
-    path for billion-node graphs; off by default because the encoding
-    costs a sort + two joins that dominate on small graphs.
+    Resumable: with ``checkpoint_dir`` every iteration is a checkpoint
+    snapshot (``staging.write_snapshot``: ``iter=NNN/data`` plus a meta
+    with ``iteration``, ``parent``, ``converged`` and per-partition
+    lineage), fingerprinted by the input edges' rows and content hash.
+    A rerun on the same edges, in this process or another, restarts
+    from the newest valid iteration instead of the input edges.
 
     ``small_graph_threshold``: once an edge count observed FOR FREE (the
     fingerprint count on the checkpoint path, or iteration 0's
@@ -263,28 +185,6 @@ def connected_components(
     of returning partial labels. Iterations already checkpointed stay,
     so a rerun with a larger ``max_iter`` resumes from them.
     """
-    if encode_ids:
-        orig = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        enc, mapping = _encode_nodes(orig)
-        cc = connected_components(
-            enc,
-            checkpoint_dir=checkpoint_dir,
-            max_iter=max_iter,
-            small_graph_threshold=small_graph_threshold,
-        )
-        return (
-            cc.join(
-                mapping.select(F.col("nid").alias("url"), F.col("url").alias("u")),
-                "url",
-            )
-            .join(
-                mapping.select(
-                    F.col("nid").alias("cluster_id"), F.col("url").alias("c")
-                ),
-                "cluster_id",
-            )
-            .select(F.col("u").alias("url"), F.col("c").alias("cluster_id"))
-        )
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
         F.col(src) != F.col(dst)
@@ -292,8 +192,8 @@ def connected_components(
     start_iter = 0
     prev_state = None
     # input fingerprint: resuming a checkpoint produced from DIFFERENT
-    # input edges (or a different parameter set) would silently return
-    # stale clusters — the fingerprint invalidates such checkpoints
+    # input edges would silently return stale clusters — the fingerprint
+    # invalidates such checkpoints
     fingerprint = None
     e_in_cached = None
     if checkpoint_dir:
@@ -304,40 +204,34 @@ def connected_components(
         # released as soon as the first iteration checkpoint materializes
         e = e.persist(StorageLevel.MEMORY_AND_DISK)
         e_in_cached = e
-        n0, h0 = _edge_state(e)
+        n0, h0 = content_state(e)
         fingerprint = {"n_edges_in": n0, "edge_hash_in": h0}
-    resumed = (
-        _latest_checkpoint(spark, checkpoint_dir) if checkpoint_dir else None
-    )
-    if resumed is not None and resumed[1].get("fingerprint") != fingerprint:
-        resumed = None  # stale checkpoint from other inputs: rebuild
-    if resumed is not None:
-        it, meta = resumed
-        e = spark.read.parquet(
-            os.path.join(checkpoint_dir, f"iter={it:03d}", "edges")
-        )
-        # verify checkpoint integrity against its recorded state before
-        # trusting it (torn/decayed files resume as wrong clusters)
-        n_ck, h_ck = _edge_state(e)
-        if (n_ck, h_ck) != (meta["n_edges"], meta["edge_hash"]):
-            resumed = None
-            e = edges.select(
-                F.col(src).alias("src"), F.col(dst).alias("dst")
-            ).where(F.col(src) != F.col(dst)).persist()
-            e_in_cached = e
-        else:
-            start_iter = it + 1
-            prev_state = (meta["n_edges"], meta["edge_hash"])
-            if meta.get("converged"):
-                if e_in_cached is not None:
-                    e_in_cached.unpersist()
+        resumed = _latest_checkpoint(spark, checkpoint_dir, fingerprint)
+        if resumed is not None:
+            e, meta = resumed
+            start_iter = meta["iteration"] + 1
+            prev_state = (meta["rows"], meta["global_hash"])
+            if meta["converged"]:
+                e_in_cached.unpersist()
                 return _labels_from_stars(e, edges, src)
 
     from pyspark.sql import Observation
 
-    from .staging import stage_parquet
-
     orig = edges.select(F.col(src), F.col(dst))
+
+    def snapshot(cur: DataFrame, it: int, converged) -> tuple[DataFrame, dict]:
+        """Write iteration ``it`` as a snapshot; ``converged`` maps the
+        written (rows, hash) to the meta's ``converged`` flag."""
+        return write_snapshot(
+            cur,
+            _iter_path(checkpoint_dir, it),
+            fingerprint,
+            lambda rows, h: {
+                "iteration": it,
+                "parent": it - 1,
+                "converged": converged(rows, h),
+            },
+        )
 
     def finish_small(cur: DataFrame, next_it: int) -> DataFrame:
         """Collect the (already materialized, <= threshold) edge set and
@@ -350,11 +244,7 @@ def connected_components(
             rows, spark, cur.select("src", "dst").schema
         )
         if checkpoint_dir:
-            assign = _checkpoint(assign, checkpoint_dir, next_it, spark)
-            n2, h2 = _edge_state(assign)
-            _write_meta(
-                spark, checkpoint_dir, next_it, n2, h2, True, fingerprint
-            )
+            assign, _ = snapshot(assign, next_it, lambda *state: True)
         if e_in_cached is not None:
             e_in_cached.unpersist()
             e_in_cached = None
@@ -403,37 +293,42 @@ def connected_components(
 
     converged = False
     for it in range(start_iter, max_iter):
-        # ONE job per iteration: the convergence state (count + content
-        # hash) rides on the materialization job as an Observation instead
-        # of a separate count+hash action over the staged edges — the
-        # per-iteration driver-action count drops from 2 to 1 (round-2
-        # VERDICT next-round #6, realized via observe() rather than
-        # two star rounds per check: an UNmaterialized second round
-        # re-executes round 1's subplan for every self-join reference,
-        # measured 2.7x slower at sf0.1).
-        obs = Observation(f"cc_state_{it}")
-        e2 = small_star(large_star(e)).observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)
-            ).alias("h"),
-        )
+        e2 = small_star(large_star(e))
         if checkpoint_dir:
-            e = _checkpoint(e2, checkpoint_dir, it, spark)
+            # the snapshot's own state job gives (rows, hash) for the
+            # convergence test and the meta
+            e, meta = snapshot(e2, it, lambda *state: state == prev_state)
+            n, h = meta["rows"], meta["global_hash"]
         else:
-            # RAM-scratch parquet stage: truncates lineage (plan growth is
-            # the classic iterative-algorithm failure mode on Spark)
-            # without leaving localCheckpoint RDDs in executor storage
-            e = stage_parquet(e2, None, f"cc_iter{it:03d}")
-        vals = obs.get
-        n, h = int(vals["n"]), int(vals["h"])
+            # ONE job per iteration: the convergence state (count +
+            # content hash) rides on the materialization job as an
+            # Observation instead of a separate count+hash action over
+            # the staged edges (round-2 VERDICT next-round #6, realized
+            # via observe() rather than two star rounds per check: an
+            # UNmaterialized second round re-executes round 1's subplan
+            # for every self-join reference, measured 2.7x slower at
+            # sf0.1). The scratch parquet stage truncates lineage (plan
+            # growth is the classic iterative-algorithm failure mode on
+            # Spark) without leaving localCheckpoint RDDs in executor
+            # storage.
+            obs = Observation(f"cc_state_{it}")
+            e = stage_parquet(
+                e2.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.coalesce(
+                        F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)
+                    ).alias("h"),
+                ),
+                None,
+                f"cc_iter{it:03d}",
+            )
+            vals = obs.get
+            n, h = int(vals["n"]), int(vals["h"])
         if e_in_cached is not None:
             e_in_cached.unpersist()  # first iteration materialized — the
             e_in_cached = None  # cached input edge set is no longer read
         converged = prev_state == (n, h)
-        if checkpoint_dir:
-            _write_meta(spark, checkpoint_dir, it, n, h, converged, fingerprint)
         if converged:
             break
         prev_state = (n, h)
@@ -452,36 +347,6 @@ def connected_components(
             f"{start_iter}, max_iter={max_iter}"
         )
     return _labels_from_stars(e, orig, src)
-
-
-def _checkpoint(e: DataFrame, checkpoint_dir: str, it: int, spark) -> DataFrame:
-    path = os.path.join(checkpoint_dir, f"iter={it:03d}", "edges")
-    e.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def _write_meta(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    it: int,
-    n: int,
-    h: int,
-    converged: bool,
-    fingerprint: dict | None,
-):
-    meta = {
-        "iteration": it,
-        "n_edges": n,
-        "edge_hash": h,
-        "converged": converged,
-        "parent": it - 1,
-        "fingerprint": fingerprint,
-    }
-    fs_write_text(
-        spark,
-        os.path.join(checkpoint_dir, f"iter={it:03d}", "_meta.json"),
-        json.dumps(meta),
-    )
 
 
 def _labels_from_stars(stars: DataFrame, orig_edges: DataFrame, src: str) -> DataFrame:

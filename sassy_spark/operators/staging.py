@@ -1,29 +1,49 @@
-"""Persist-free staging for operator intermediates.
+"""Parquet staging and checkpoint snapshots for operator intermediates.
 
-Multi-consumer intermediates (LSH bucket tables, candidate pair sets,
-gram tables) used to be ``persist()``-ed and never released — over a
-long-lived session repeated operator calls accrete executor storage
-until eviction churn sets in (round-2 VERDICT "What's wrong" #2). The
-staging discipline here replaces those caches: the intermediate is
-written ONCE to parquet (the caller-provided audit/handoff path, or a
-RAM-backed session temp dir) and read back, so every upstream cache can
-be unpersisted immediately after the write and an operator call leaves
-no persisted RDDs behind.
+Scratch staging (:func:`stage_parquet`). Multi-consumer intermediates
+(LSH bucket tables, candidate pair sets, gram tables) used to be
+``persist()``-ed and never released — over a long-lived session repeated
+operator calls accrete executor storage until eviction churn sets in
+(round-2 VERDICT "What's wrong" #2). The staging discipline here
+replaces those caches: the intermediate is written ONCE to parquet (the
+caller-provided audit/handoff path, or a session temp dir under
+:func:`scratch_root`) and read back, so every upstream cache can be
+unpersisted immediately after the write and an operator call leaves no
+persisted RDDs behind. The temp root is ``$SASSY_SCRATCH_DIR``, else the
+system temp dir (never RAM by default, so a killed session leaves
+nothing in memory); temp dirs are removed at interpreter exit. On a real
+cluster it is per-executor NVMe / HDFS scratch.
 
-On a real cluster the temp root is per-executor NVMe / HDFS scratch; in
-this sandbox it is /dev/shm (same RAM the persist would have used, but
-with deterministic lifetime — temp dirs are removed at interpreter
-exit).
+Checkpoint snapshots (:func:`write_snapshot` / :func:`read_snapshot`),
+the one resume mechanism of ``linkage.link`` stages and
+``cluster.connected_components`` iterations. A snapshot is a directory
+``<path>/data`` (parquet) plus ``<path>/_meta.json``. The meta is
+written last and records the caller's fingerprint (input content +
+parameters, never a plan hash: plan hashes change from one JVM to the
+next), the rows and order-insensitive content hash of what was written,
+and per-partition lineage (rows and hash per partition of the written
+data). A resume trusts a snapshot only when its fingerprint matches and
+the rows and hash re-read from disk match the meta; otherwise it logs
+why and the caller rebuilds. Meta IO goes through the Hadoop FS API so
+data and meta share a filesystem (HDFS/S3 safe).
 """
 
 from __future__ import annotations
 
 import atexit
+import json
+import logging
 import os
 import shutil
 import tempfile
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 _TEMP_DIRS: list[str] = []
 
@@ -37,13 +57,7 @@ atexit.register(_cleanup)
 
 
 def scratch_root() -> str:
-    base = os.environ.get("SASSY_SCRATCH_DIR")
-    if base is None:
-        base = (
-            "/dev/shm/sassy-scratch"
-            if os.path.isdir("/dev/shm")
-            else tempfile.gettempdir()
-        )
+    base = os.environ.get("SASSY_SCRATCH_DIR") or tempfile.gettempdir()
     os.makedirs(base, exist_ok=True)
     return base
 
@@ -65,3 +79,147 @@ def stage_parquet(
         _TEMP_DIRS.append(path)
     df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
+
+
+# --- Hadoop FileSystem text IO: checkpoint metas, metrics and pointers
+# must live on the SAME filesystem as the data (HDFS/S3/local) or
+# resumability breaks the moment the pipeline runs off the driver's disk
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(conf), hpath, jvm
+
+
+def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
+    fs, hpath, _ = _hadoop_fs(spark, path)
+    out = fs.create(hpath, True)
+    try:
+        out.write(bytearray(content.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def fs_read_text(spark: SparkSession, path: str) -> str | None:
+    fs, hpath, jvm = _hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    stream = fs.open(hpath)
+    try:
+        reader = jvm.java.io.BufferedReader(
+            jvm.java.io.InputStreamReader(stream, "UTF-8")
+        )
+        lines = []
+        line = reader.readLine()
+        while line is not None:
+            lines.append(line)
+            line = reader.readLine()
+        return "\n".join(lines)
+    finally:
+        stream.close()
+
+
+def fs_list_dirs(spark: SparkSession, path: str) -> list[str]:
+    fs, hpath, _ = _hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return []
+    return [
+        st.getPath().getName()
+        for st in fs.listStatus(hpath)
+        if st.isDirectory()
+    ]
+
+
+# --- checkpoint snapshots
+
+
+def _content_hash(df: DataFrame) -> Column:
+    # order-insensitive; bit_xor cannot overflow (ANSI-safe)
+    return F.coalesce(F.bit_xor(F.xxhash64(*df.columns)), F.lit(0))
+
+
+def content_state(df: DataFrame) -> tuple[int, int]:
+    """(rows, order-insensitive content hash of every column) in one job."""
+    row = df.select(
+        F.count("*").alias("n"), _content_hash(df).alias("h")
+    ).collect()[0]
+    return int(row["n"]), int(row["h"])
+
+
+def write_snapshot(
+    df: DataFrame,
+    path: str,
+    fingerprint: dict,
+    extra: Callable[[int, int], dict] = lambda rows, h: {},
+) -> tuple[DataFrame, dict]:
+    """Write ``df`` as the snapshot at ``path``; return the parquet-backed
+    frame and the committed meta.
+
+    One job over what was written gives per-partition (rows, content
+    hash); the global rows and hash are their sum and XOR. ``extra`` maps
+    (rows, hash) to caller fields stored in the meta (a CC iteration's
+    ``converged`` depends on its own state). The meta is written last, so
+    a snapshot without one is incomplete.
+    """
+    spark = df.sparkSession
+    data_p = os.path.join(path, "data")
+    df.write.mode("overwrite").parquet(data_p)
+    back = spark.read.parquet(data_p)
+    parts = sorted(
+        back.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count("*").alias("rows"), _content_hash(back).alias("hash"))
+        .collect(),
+        key=lambda r: r["pid"],
+    )
+    rows = sum(int(r["rows"]) for r in parts)
+    ghash = 0
+    for r in parts:
+        ghash ^= int(r["hash"])
+    meta = {
+        **extra(rows, ghash),
+        "fingerprint": fingerprint,
+        "rows": rows,
+        "global_hash": ghash,
+        "partitions": [
+            {"pid": int(r["pid"]), "rows": int(r["rows"]), "hash": int(r["hash"])}
+            for r in parts
+        ],
+    }
+    fs_write_text(spark, os.path.join(path, "_meta.json"), json.dumps(meta))
+    return back, meta
+
+
+def read_snapshot(
+    spark: SparkSession, path: str, fingerprint: dict
+) -> tuple[DataFrame, dict] | None:
+    """The snapshot at ``path`` as (frame, meta) when its meta exists, its
+    fingerprint equals ``fingerprint`` and the rows and hash re-read from
+    disk equal the meta's; else ``None``. A snapshot that exists but is
+    refused logs the reason as a warning."""
+    try:
+        raw = fs_read_text(spark, os.path.join(path, "_meta.json"))
+        if raw is None:
+            # a first run has no snapshot yet: nothing to report as refused
+            log.info("snapshot %s: no meta, building", path)
+            return None
+        meta = json.loads(raw)
+        if meta["fingerprint"] != fingerprint:
+            reason = "fingerprint differs (other input or parameters)"
+        else:
+            back = spark.read.parquet(os.path.join(path, "data"))
+            state = content_state(back)
+            if state == (meta["rows"], meta["global_hash"]):
+                return back, meta
+            reason = (
+                f"data on disk reads (rows, hash) {state}, meta says "
+                f"({meta['rows']}, {meta['global_hash']})"
+            )
+    except (CapturedException, Py4JJavaError, ValueError, KeyError) as ex:
+        # missing or corrupt parquet (AnalysisException, failed read) or
+        # an unreadable meta (JSONDecodeError is a ValueError)
+        first_line = str(ex).partition("\n")[0]
+        reason = f"{type(ex).__name__}: {first_line[:200]}"
+    log.warning("snapshot %s not resumed, rebuilding: %s", path, reason)
+    return None

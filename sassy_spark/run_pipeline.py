@@ -7,11 +7,16 @@
         --checkpoint <checkpoint dir> \
         --k-frac 0.05
 
-Resumable: reruns skip completed blocking/pair/score stages and resume
-connected components from the last finished iteration (see
-operators/linkage._stage and operators/cluster checkpoints). When no
---input is given, generates a deterministic synthetic corpus (for
-dry-runs/CI).
+Resumable: a rerun with the same --checkpoint, in the same process or
+a new spark-submit, resumes from the latest valid snapshot under it:
+link()'s block-key, candidate-pair and scored stages
+(<checkpoint>/stage=*) and then the connected-components iterations
+(<checkpoint>/cc/iter=*). Every snapshot is fingerprinted by the
+content of its input (rows + hash) and the parameters and re-verified
+against the data on disk before it is trusted (operators/staging
+write_snapshot/read_snapshot); a rewritten input or other parameters
+rebuild. When no --input is given, generates a deterministic synthetic
+corpus (for dry-runs/CI).
 
 Metrics: per-stage row counts and wall times + candidate-pairs/sec are
 written to <checkpoint>/metrics.json and logged.
@@ -78,20 +83,6 @@ def main() -> None:
         n_hashes=args.n_hashes,
         checkpoint_dir=args.checkpoint,
     )
-    # same fingerprint discipline as the inner stages: a rerun against
-    # different input/params rebuilds instead of reusing stale output
-    fingerprint = {
-        "input_plan": int(pages.semanticHash()),
-        "params": {
-            "k": args.k,
-            "k_frac": args.k_frac,
-            "text_col": args.text_col,
-            "max_block_size": args.max_block_size,
-            "bands": args.bands,
-            "n_hashes": args.n_hashes,
-        },
-    }
-    scored = linkage._stage(scored, args.checkpoint, "scored", fingerprint)
     n_scored = scored.count()
     dt = time.time() - t
     metrics["stages"]["score"] = {
@@ -121,7 +112,7 @@ def main() -> None:
 
     # metrics go through the Hadoop FS API so they land on the same
     # filesystem as the checkpoints (HDFS/S3 safe, not driver-local)
-    from sassy_spark.operators.cluster import fs_write_text
+    from sassy_spark.operators.staging import fs_write_text
 
     fs_write_text(
         spark,

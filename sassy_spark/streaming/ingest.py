@@ -346,11 +346,8 @@ def streaming_cluster_maintenance(
     historical PAIR SET is never re-read — exactly the property that
     makes nightly-crawl folding tractable when history is 10^12 pages.
     """
-    from ..operators.cluster import (
-        connected_components,
-        fs_read_text,
-        fs_write_text,
-    )
+    from ..operators.cluster import connected_components
+    from ..operators.staging import fs_read_text, fs_write_text
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
@@ -394,7 +391,7 @@ def read_maintained_clusters(
 ) -> DataFrame:
     """Read the current (url, cluster_id) state written by
     :func:`streaming_cluster_maintenance` (the _LATEST pointer)."""
-    from ..operators.cluster import fs_read_text
+    from ..operators.staging import fs_read_text
 
     ptr = fs_read_text(spark, f"{state_dir}/_LATEST")
     if ptr is None:

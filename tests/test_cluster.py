@@ -87,17 +87,44 @@ def test_cc_self_loops_ignored(spark):
     assert got["a"] == "a" and got["b"] == "a" and got["c"] == "c"
 
 
-def test_cc_encoded_ids_identical(spark):
-    """Long-id encoding must produce byte-identical labels (the scale
-    path: 8-byte shuffles instead of url strings)."""
-    nodes, edges = _random_graph(17)
+def test_cc_torn_iteration_rebuilds(spark, tmp_path, caplog):
+    """Iteration snapshots carry per-partition lineage; after one part
+    file of the newest iteration is deleted, a rerun logs why that
+    snapshot is refused, resumes from an older valid one and returns the
+    labels of a clean run."""
+    import json
+    import logging
+    import os
+
+    nodes, edges = _random_graph(21)
     df = spark.createDataFrame(edges, ["src", "dst"])
-    plain = {r["url"]: r["cluster_id"] for r in connected_components(df).collect()}
-    enc = {
+    ck = tmp_path / "cc_torn"
+    clean = {
         r["url"]: r["cluster_id"]
-        for r in connected_components(df, encode_ids=True).collect()
+        for r in connected_components(
+            df, checkpoint_dir=str(ck), small_graph_threshold=0
+        ).collect()
     }
-    assert plain == enc
+    iters = sorted(d for d in os.listdir(ck) if d.startswith("iter="))
+    assert len(iters) >= 2
+    newest = ck / iters[-1]
+    meta = json.loads((newest / "_meta.json").read_text())
+    assert meta["converged"] and meta["parent"] == meta["iteration"] - 1
+    assert sum(p["rows"] for p in meta["partitions"]) == meta["rows"] > 0
+    part = sorted((newest / "data").glob("part-*.parquet"))[0]
+    part.unlink()
+    with caplog.at_level(logging.WARNING, logger="sassy_spark.operators.staging"):
+        again = {
+            r["url"]: r["cluster_id"]
+            for r in connected_components(
+                df, checkpoint_dir=str(ck), small_graph_threshold=0
+            ).collect()
+        }
+    assert again == clean
+    assert any(
+        str(newest) in r.getMessage() and "not resumed" in r.getMessage()
+        for r in caplog.records
+    ), [r.getMessage() for r in caplog.records]
 
 
 def test_cc_resume_mid_run(spark, tmp_path):

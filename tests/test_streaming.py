@@ -212,7 +212,7 @@ def test_streaming_cluster_maintenance_equals_batch(spark, tmp_path):
     assert got == want
     assert {c for _, c in got} == {1, 10, 20}
 
-    from sassy_spark.operators.cluster import fs_read_text
+    from sassy_spark.operators.staging import fs_read_text
 
     ptr_before = fs_read_text(spark, f"{state}/_LATEST")
     q2 = streaming_cluster_maintenance(spark, str(src), state, ck)

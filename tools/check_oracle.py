@@ -43,7 +43,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> int:
-    spark = build_spark(cores=16)
+    spark = build_spark()
     con = duckdb.connect()
     for t in E.TABLES:
         con.execute(

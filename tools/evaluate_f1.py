@@ -114,7 +114,7 @@ def main() -> None:
 
     from sassy_spark import build_spark
 
-    spark = build_spark(app_name="f1_eval", cores=16)
+    spark = build_spark(app_name="f1_eval")
     out = evaluate(spark, n_pages, k_frac)
     print(json.dumps(out))
     with open(REPO / "BENCH" / "BASELINE.md", "a") as f:
