@@ -22,16 +22,19 @@ snapshot/manifest discipline is the same). Without a checkpoint dir the
 iterations go to scratch parquet (``staging.stage_parquet``) and carry
 their convergence state on an Observation.
 
-Node ids are the url strings themselves: component representative = the
-lexicographically smallest url. Strings keep ids collision-free at any
-scale; swap in a dictionary-encoded long id table if shuffle width ever
-dominates (noted trade-off).
+Node ids are the url strings (or long ids) themselves: a component's
+label is its smallest id in Spark's order (UTF-8 bytes for strings). The
+star rounds shuffle the ids as they are; a driver-sized graph finishes in
+one Arrow pass that dictionary-encodes them for union-find.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -42,6 +45,8 @@ from .staging import (
     stage_parquet,
     write_snapshot,
 )
+
+log = logging.getLogger(__name__)
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -116,39 +121,37 @@ def _latest_checkpoint(
     return None
 
 
-def _union_find_assign(rows: list, spark: SparkSession, schema) -> DataFrame:
-    """Driver-side union-find over a SMALL collected edge list; returns a
-    stars-equivalent frame (node -> component min, minima omitted) with
-    the caller's src/dst schema — byte-identical labels to a converged
-    star iteration (UTF-8 byte order == code-point order, so Python min
-    over str matches Spark string ordering)."""
-    parent: dict = {}
+def _component_labels(edges: pa.Table) -> pa.Table:
+    """(url, cluster_id = component min) for every endpoint of a SMALL
+    Arrow edge table: union-find, smaller root wins, on codes into the
+    sorted unique ids. Arrow sorts strings by UTF-8 bytes as Spark does,
+    so labels equal the star rounds'. Self-loops and null endpoints add a
+    node, never an edge (as in the star rounds)."""
+    ids = pa.chunked_array(
+        edges.column(0).chunks + edges.column(1).chunks, edges.schema[0].type
+    )
+    uniq = pc.unique(ids)
+    uniq = uniq.take(pc.sort_indices(uniq))
+    valid = edges.drop_null()
+    codes = [
+        pc.index_in(valid.column(i), value_set=uniq).to_numpy().tolist()
+        for i in (0, 1)
+    ]
+    parent = list(range(len(uniq)))
 
     def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = r, parent[x]
-        return r
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
 
-    for row in rows:
-        a, b = find(row[0]), find(row[1])
-        if a != b:
-            parent[max(a, b)] = min(a, b)
-    comp_min: dict = {}
-    members: dict = {}
-    for node in set(parent) | {r[0] for r in rows} | {r[1] for r in rows}:
-        root = find(node)
-        comp_min[root] = min(comp_min.get(root, node), node)
-        members.setdefault(root, []).append(node)
-    out = [
-        (node, m)
-        for root, m in comp_min.items()
-        for node in members[root]
-        if node != m
-    ]
-    return spark.createDataFrame(out, schema=schema)
+    for a, b in zip(*codes):
+        a, b = find(a), find(b)
+        parent[max(a, b)] = min(a, b)
+    root = pa.array([find(i) for i in range(len(uniq))], pa.int64())
+    return pa.table({"url": uniq, "cluster_id": uniq.take(root)})
 
 
 def connected_components(
@@ -168,56 +171,65 @@ def connected_components(
     A rerun on the same edges, in this process or another, restarts
     from the newest valid iteration instead of the input edges.
 
-    ``small_graph_threshold``: once an edge count observed FOR FREE (the
-    fingerprint count on the checkpoint path, or iteration 0's
-    convergence Observation) shows the edge set fits the driver, the
-    remaining O(log n) star rounds are replaced by one collect + driver
-    union-find — identical labels, none of the per-iteration fixed cost
-    (~5 shuffles + a staging write per round, which dominated q22 at
-    small scale: 6 x ~1.2 s of rounds for 1,410 edges). At 10^12-node
-    scale the count stays far above the threshold and the distributed
-    path runs untouched; no extra action is ever spent to learn the
-    size. 100k edges collect to ~tens of MB — driver-safe. Set 0 to
-    disable (tests pin label equality between both paths).
+    ``small_graph_threshold``: once an edge count already taken (the job
+    that materializes the persisted input, or a star round's convergence
+    state) shows the edge set fits the driver, the remaining O(log n)
+    star rounds are replaced by one Arrow fetch and union-find on
+    dictionary-encoded ids — identical labels, none of the per-round
+    fixed cost (~5 shuffles + a write). If the input itself fits, the
+    labels are a local relation that a join broadcasts: one job after
+    the edge fetch. At 10^12-node scale the count stays far above the
+    threshold and the distributed path runs untouched; the upstream runs
+    once either way. 100k edges of 60-byte urls are ~12 MB of Arrow.
+    Set 0 to disable (tests pin label equality between both paths).
+    The path, star iterations run and convergence are logged at INFO.
 
     Raises ``RuntimeError`` naming the iterations run and ``max_iter``
     when the star rounds stop at ``max_iter`` before converging, instead
     of returning partial labels. Iterations already checkpointed stay,
     so a rerun with a larger ``max_iter`` resumes from them.
     """
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation
+
     spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
-        F.col(src) != F.col(dst)
-    )
+    # persist first: the count (on the checkpoint path the fingerprint,
+    # see below) and the driver finish or iteration 0 would otherwise
+    # each re-execute the (expensive) upstream edge pipeline; released
+    # once they have read it. Self-loops stay, so self-loop-only nodes
+    # still get a label.
+    inp = cached = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    e = None
     start_iter = 0
     prev_state = None
-    # input fingerprint: resuming a checkpoint produced from DIFFERENT
-    # input edges would silently return stale clusters — the fingerprint
-    # invalidates such checkpoints
     fingerprint = None
-    e_in_cached = None
-    if checkpoint_dir:
-        from pyspark import StorageLevel
 
-        # persist first: the fingerprint scan and iteration 0 would
-        # otherwise each re-execute the (expensive) upstream edge pipeline;
-        # released as soon as the first iteration checkpoint materializes
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
-        e_in_cached = e
-        n0, h0 = content_state(e)
-        fingerprint = {"n_edges_in": n0, "edge_hash_in": h0}
+    def report(path: str, rounds: int, converged: bool) -> None:
+        log.info(
+            "connected_components: %d input edges, %s, %d star iterations"
+            " run, converged=%s",
+            n_in, path, rounds, converged,
+        )
+
+    if checkpoint_dir:
+        # input fingerprint: resuming a checkpoint produced from DIFFERENT
+        # input edges would silently return stale clusters — the
+        # fingerprint invalidates such checkpoints
+        n_in, h_in = content_state(inp)
+        fingerprint = {"n_edges_in": n_in, "edge_hash_in": h_in}
         resumed = _latest_checkpoint(spark, checkpoint_dir, fingerprint)
         if resumed is not None:
             e, meta = resumed
             start_iter = meta["iteration"] + 1
             prev_state = (meta["rows"], meta["global_hash"])
             if meta["converged"]:
-                e_in_cached.unpersist()
-                return _labels_from_stars(e, edges, src)
-
-    from pyspark.sql import Observation
-
-    orig = edges.select(F.col(src), F.col(dst))
+                cached.unpersist()
+                report(f"resumed converged iteration {meta['iteration']}", 0, True)
+                return _labels_from_stars(e, inp)
+    else:
+        n_in = inp.count()
 
     def snapshot(cur: DataFrame, it: int, converged) -> tuple[DataFrame, dict]:
         """Write iteration ``it`` as a snapshot; ``converged`` maps the
@@ -233,67 +245,49 @@ def connected_components(
             },
         )
 
-    def finish_small(cur: DataFrame, next_it: int) -> DataFrame:
-        """Collect the (already materialized, <= threshold) edge set and
-        finish with driver union-find; on the checkpoint path the
-        stars-equivalent assignment is written as a converged iteration,
-        so resume semantics are identical to the distributed path."""
-        nonlocal e_in_cached
-        rows = [(r[0], r[1]) for r in cur.select("src", "dst").collect()]
-        assign = _union_find_assign(
-            rows, spark, cur.select("src", "dst").schema
-        )
-        if checkpoint_dir:
-            assign, _ = snapshot(assign, next_it, lambda *state: True)
-        if e_in_cached is not None:
-            e_in_cached.unpersist()
-            e_in_cached = None
-        return _labels_from_stars(assign, orig, src)
+    def finish_small(cur: DataFrame, it: int, rounds: int) -> DataFrame:
+        """Label the (materialized, <= threshold) edge set in one Arrow
+        fetch. A checkpoint gets the stars-equivalent edges (node -> min,
+        minima left out) as converged iteration ``it``. At iteration 0
+        ``cur`` is the whole input, so the labels are final; later ones
+        lack self-loop-only nodes, which the distributed labeling adds."""
+        labels = _component_labels(cur.toArrow())
+        if cached is not None:
+            cached.unpersist()
+        report(f"driver finish at iteration {it}", rounds, True)
+        if checkpoint_dir or it:
+            stars = spark.createDataFrame(
+                labels.filter(
+                    pc.not_equal(labels["url"], labels["cluster_id"])
+                ).rename_columns(["src", "dst"])
+            )
+            if checkpoint_dir:
+                stars, _ = snapshot(stars, it, lambda *state: True)
+            if it:
+                return _labels_from_stars(stars, inp)
+        return spark.createDataFrame(labels)
 
-    # size already known for free (input fingerprint count on the
-    # checkpoint path, or the resumed iteration's meta): skip the star
-    # rounds entirely when the graph fits the driver
-    if small_graph_threshold:
-        known_n = (
-            prev_state[0]
-            if prev_state is not None
-            else (fingerprint["n_edges_in"] if fingerprint else None)
-        )
-        if known_n is not None and known_n <= small_graph_threshold:
-            return finish_small(e, start_iter)
-
-    if not checkpoint_dir and start_iter == 0:
-        # Materialize the input edge set ONCE to a RAM-scratch parquet,
-        # with its count observed on the same job (guide §2.4: remove
-        # repeated subtree execution; §1.5-style single action). The
-        # star rounds reference the edge frame on both union sides and
-        # both join sides, and the final label join reads it twice more
-        # for the node set — without a checkpoint dir every reference
-        # re-executed the upstream subtree, which for the CC queries is
-        # the Myers scoring stage itself (measured at sf0.1: q22 ran
-        # score_pairs 3x inside one call — 4.9s; staged once it runs
-        # once — ~2.4s). The observed count then feeds the small-graph
-        # gate below with no separate count job, so driver-sized graphs
-        # skip the star rounds entirely (previously paid one full star
-        # round before the gate could see a count). Self-loops are kept
-        # in the staged frame so the label join still emits rows for
-        # self-loop-only nodes, exactly as before.
-        obs_in = Observation("cc_input_state")
-        staged_in = stage_parquet(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .observe(obs_in, F.count(F.lit(1)).alias("n")),
-            None,
-            "cc_input",
-        )
-        n_in = int(obs_in.get["n"])
-        e = staged_in.where(F.col("src") != F.col("dst"))
-        orig = staged_in
-        if small_graph_threshold and n_in <= small_graph_threshold:
-            return finish_small(e, 0)
+    # size already known (the input count, or the resumed iteration's
+    # meta): skip the star rounds entirely when the graph fits the driver
+    known_n = prev_state[0] if prev_state is not None else n_in
+    if small_graph_threshold and known_n <= small_graph_threshold:
+        return finish_small(inp if e is None else e, start_iter, 0)
+    if not checkpoint_dir:
+        # the star rounds and the final label join read the input again
+        # after the cache is released; from scratch parquet, not by
+        # re-running the upstream (for the CC queries the Myers scoring
+        # itself: q22 at sf0.1 ran score_pairs 3x, 4.9 s; staged, ~2.4 s)
+        inp = stage_parquet(inp, None, "cc_input")
+        cached.unpersist()
+        cached = None
+    if e is None:
+        e = inp.where(F.col("src") != F.col("dst"))
 
     converged = False
+    rounds = 0
     for it in range(start_iter, max_iter):
         e2 = small_star(large_star(e))
+        rounds += 1
         if checkpoint_dir:
             # the snapshot's own state job gives (rows, hash) for the
             # convergence test and the meta
@@ -325,36 +319,37 @@ def connected_components(
             )
             vals = obs.get
             n, h = int(vals["n"]), int(vals["h"])
-        if e_in_cached is not None:
-            e_in_cached.unpersist()  # first iteration materialized — the
-            e_in_cached = None  # cached input edge set is no longer read
+        if cached is not None:
+            cached.unpersist()  # first iteration materialized — the
+            cached = None  # cached input edge set is no longer read
         converged = prev_state == (n, h)
         if converged:
             break
         prev_state = (n, h)
-        # the contracted edge set now fits the driver: one collect +
+        # the contracted edge set now fits the driver: one Arrow fetch +
         # union-find replaces every remaining star round (each costs ~5
         # shuffles + a staging write regardless of size)
         if small_graph_threshold and n <= small_graph_threshold:
-            return finish_small(e, it + 1)
+            return finish_small(e, it + 1, rounds)
 
-    if e_in_cached is not None:
-        e_in_cached.unpersist()
+    if cached is not None:
+        cached.unpersist()
+    report("star rounds", rounds, converged)
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge: "
-            f"{max(max_iter - start_iter, 0)} iterations run from iteration "
+            f"{rounds} iterations run from iteration "
             f"{start_iter}, max_iter={max_iter}"
         )
-    return _labels_from_stars(e, orig, src)
+    return _labels_from_stars(e, inp)
 
 
-def _labels_from_stars(stars: DataFrame, orig_edges: DataFrame, src: str) -> DataFrame:
+def _labels_from_stars(stars: DataFrame, orig_edges: DataFrame) -> DataFrame:
     """After convergence every node points at its component min; nodes that
     never appear as src ARE minima (roots) — including isolated inputs."""
     nodes = (
-        orig_edges.select(F.col(orig_edges.columns[0]).alias("url"))
-        .union(orig_edges.select(F.col(orig_edges.columns[1]).alias("url")))
+        orig_edges.select(F.col("src").alias("url"))
+        .union(orig_edges.select(F.col("dst").alias("url")))
         .distinct()
     )
     assign = stars.select(

@@ -10,7 +10,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def spark():
     from sassy_spark import build_spark
 
-    s = build_spark(app_name="sassy_tests", cores=8, shuffle_partitions=8)
+    # cores: SPARK_GRAFT_CPUS, else the CPUs this process may run on
+    s = build_spark(app_name="sassy_tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -2,6 +2,7 @@
 plus checkpoint/resume semantics."""
 
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -240,6 +241,120 @@ def test_cc_small_graph_finisher_identical_labels(spark, seed, tmp_path):
         ).collect()
     }
     assert a == b == c
+
+
+def _labels_by_oracle(edges, nodes, key):
+    """Python oracle: union-find components, each labelled by its minimum
+    member under ``key``."""
+    root = _uf_components(edges, nodes)
+    members = {}
+    for n, r in root.items():
+        members.setdefault(r, []).append(n)
+    return {n: min(members[root[n]], key=key) for n in nodes}
+
+
+@pytest.mark.parametrize(
+    "edges,schema,key",
+    [
+        (
+            [
+                ("http://a.com/x", "http://A.com/x"),
+                ("http://Z.com/", "http://a.com/x"),
+                ("http://é.fr/1", "http://ä.de/2"),
+                ("http://e.fr/1", "http://é.fr/1"),
+                # U+FFFF sorts before U+1F600 in UTF-8 (EF BF BF < F0 ..)
+                # but after it in UTF-16 (FFFF > D83D): the byte order wins
+                ("x\U0001F600", "x\uffff"),
+                ("\U0001F600", "\ue000"),
+                ("\ue000", "\uffff"),
+                ("ÿ", "ÿ"),
+            ],
+            "src string, dst string",
+            lambda s: s.encode("utf-8"),
+        ),
+        (
+            [(-5, 3), (3, 2**40), (7, -(2**62)), (2**62, 7), (0, 0)],
+            "src long, dst long",
+            lambda v: v,
+        ),
+    ],
+    ids=["utf8_urls", "long_ids"],
+)
+def test_cc_driver_labels_follow_spark_ordering(spark, edges, schema, key):
+    """The driver finisher's Arrow sort must order ids exactly as Spark
+    does: the same labels as the star rounds and as a Python oracle that
+    orders strings by UTF-8 bytes and longs numerically."""
+    df = spark.createDataFrame(edges, schema)
+    oracle = _labels_by_oracle(
+        [e for e in edges if e[0] != e[1]], {v for e in edges for v in e}, key
+    )
+    driver = {r["url"]: r["cluster_id"] for r in connected_components(df).collect()}
+    star_only = {
+        r["url"]: r["cluster_id"]
+        for r in connected_components(df, small_graph_threshold=0).collect()
+    }
+    assert driver == star_only == oracle
+
+
+def test_cc_logs_path_taken(spark, caplog):
+    """One INFO line per call names the input size, the path (driver
+    finish at iteration i, or star rounds), the star iterations run and
+    convergence; a graph that contracts below the threshold after one
+    round finishes on the driver and still labels self-loop-only nodes."""
+    import logging
+
+    edges = [(f"p{i:02d}", f"p{i+1:02d}") for i in range(63)] + [("zz", "zz")]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    with caplog.at_level(logging.INFO, logger="sassy_spark.operators.cluster"):
+        connected_components(df).collect()
+        connected_components(df, small_graph_threshold=0).collect()
+        mid = {
+            r["url"]: r["cluster_id"]
+            for r in connected_components(df, small_graph_threshold=63).collect()
+        }
+        with pytest.raises(RuntimeError):
+            connected_components(df, max_iter=1, small_graph_threshold=0)
+    msgs = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == "sassy_spark.operators.cluster"
+    ]
+    head = "connected_components: 64 input edges, "
+    assert msgs[0] == head + (
+        "driver finish at iteration 0, 0 star iterations run, converged=True"
+    )
+    assert re.fullmatch(
+        re.escape(head) + r"star rounds, \d+ star iterations run, converged=True",
+        msgs[1],
+    ), msgs
+    assert msgs[2] == head + (
+        "driver finish at iteration 1, 1 star iterations run, converged=True"
+    )
+    assert msgs[3] == head + "star rounds, 1 star iterations run, converged=False"
+    assert mid == {**{f"p{i:02d}": "p00" for i in range(64)}, "zz": "zz"}
+
+
+def test_resolve_entities_driver_labels_broadcast(spark, tmp_path):
+    """On a driver-sized match graph the labels are a local relation that
+    the page join broadcasts: no sort-merge join and no aggregate of the
+    distributed star labeling remain in the executed plan."""
+    from sassy_spark.operators.cluster import resolve_entities
+
+    path = str(tmp_path / "pages")
+    spark.createDataFrame([(f"u{i}",) for i in range(8)], ["url"]).write.parquet(path)
+    matches = spark.createDataFrame(
+        [("u0", "u1", True), ("u2", "u1", True), ("u3", "u4", False), ("u6", "u5", True)],
+        ["url_a", "url_b", "is_match"],
+    )
+    ents = resolve_entities(spark.read.parquet(path), matches)
+    got = dict(ents.collect())
+    assert got == {
+        "u0": "u0", "u1": "u0", "u2": "u0", "u3": "u3",
+        "u4": "u4", "u5": "u5", "u6": "u5", "u7": "u7",
+    }
+    plan = ents._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LocalTableScan" in plan, plan
+    assert "SortMergeJoin" not in plan and "HashAggregate" not in plan, plan
 
 
 def test_label_propagation_bounded_hops(spark):
