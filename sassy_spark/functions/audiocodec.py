@@ -1,9 +1,8 @@
 """Pure-python WAV (RIFF PCM) codec — REAL audio decode without ffmpeg.
 
-Companion to ``imagecodec.py`` (round-4 multimodal upgrade): the
-container has no soundfile/ffmpeg, but canonical WAV is decodable with
-nothing beyond ``struct`` + numpy, so the multimodal operators' audio
-path can be real for PCM WAV instead of an env-gated fake.
+Companion to ``imagecodec.py``: canonical WAV is decodable with nothing
+beyond ``struct`` + numpy; the q46 driver query decodes audio with it
+inside executors.
 
 Coverage (documented, errors are loud not silent):
   WAV: RIFF/WAVE container, ``fmt `` chunk with audio format 1
@@ -119,32 +118,3 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     return arr.reshape(n_frames, n_ch).astype(
         np.uint8 if bits == 8 else np.int16
     ), rate
-
-
-def rms_envelope(samples: np.ndarray, bins: int = 32) -> np.ndarray:
-    """Deterministic ``bins``-segment RMS energy envelope, the audio
-    analogue of the image path's luminance histogram: frames are split
-    into ``bins`` contiguous equal segments (the tail segment absorbs
-    the remainder) and each yields the RMS of the channel-mean signal.
-
-    8-bit input is centred at 128 first so silence maps to 0 energy.
-    Returns float32 (bins,); all-zero for empty input.
-    """
-    arr = np.asarray(samples)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    if arr.dtype == np.uint8:
-        sig = arr.astype(np.float64) - 128.0
-    else:
-        sig = arr.astype(np.float64)
-    sig = sig.mean(axis=1)
-    n = sig.shape[0]
-    out = np.zeros(bins, dtype=np.float32)
-    if n == 0:
-        return out
-    edges = np.linspace(0, n, bins + 1).astype(np.int64)
-    for b in range(bins):
-        seg = sig[edges[b] : edges[b + 1]]
-        if seg.size:
-            out[b] = np.sqrt(np.mean(seg * seg))
-    return out

@@ -1,11 +1,14 @@
 """Hash-sketch functions: MinHash, SimHash, winnowing fingerprints.
 
-All implemented as Arrow-batched pandas UDFs over numpy (no per-row
-Python objects in the loop bodies beyond a thin per-document dispatch;
-the inner work is vectorized uint64 math) — the same batch-vectorization
-discipline as the scoring kernel. Deterministic: hash mixers are fixed
-constants, permutations derive from a seed, so blocking keys are stable
-across runs/partitions (required for resumable checkpoints).
+The MinHash sketch is batch-at-a-time numpy (``shingle_hashes_batch`` +
+``oph_signatures_batch``), called by ``operators.dedup.minhash_sketch``,
+the one sketch UDF. SimHash and winnowing are pandas UDFs over numpy
+(no per-row Python objects in the loop bodies beyond a thin
+per-document dispatch; the inner work is vectorized uint64 math).
+Deterministic: hash mixers are fixed constants, permutations derive
+from a seed, so blocking keys are stable across runs/partitions
+(required for resumable checkpoints). The batch sketch is pinned bit
+for bit against a per-document oracle in ``tests/test_hashing.py``.
 """
 
 from __future__ import annotations
@@ -37,45 +40,6 @@ def shingle_hashes(text: str, n: int = 5) -> np.ndarray:
     pw = np.uint64(1099511628211) ** np.arange(n, dtype=np.uint64)  # FNV prime
     raw = (win * pw[::-1]).sum(axis=1, dtype=np.uint64)
     return _splitmix64(raw)
-
-
-def minhash_signature(
-    text: str, n_hashes: int, ngram: int, seed: int
-) -> np.ndarray:
-    h = np.unique(shingle_hashes(text, ngram))
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, 1 << 61, n_hashes, dtype=np.uint64) | np.uint64(1)
-    b = rng.integers(0, 1 << 61, n_hashes, dtype=np.uint64)
-    # (a*h + b) over uint64 wraparound is a fine universal-ish family here
-    vals = (h[:, None] * a[None, :] + b[None, :]) & _MASK
-    return vals.min(axis=0)
-
-
-def oph_signature(h: np.ndarray, n_bins: int = 128) -> np.ndarray:
-    """One-permutation minhash (Li, Owen, Zhang 2012): bin each shingle
-    hash by its low bits, keep the min per bin — one pass over the
-    shingles instead of n_bins passes. Empty bins are filled by rotation
-    densification (borrow from the next non-empty bin, re-mixed), which
-    preserves the unbiased Jaccard estimate for LSH banding.
-    """
-    bins = (h % np.uint64(n_bins)).astype(np.int64)
-    vals = h // np.uint64(n_bins)
-    sig = np.full(n_bins, _MASK, dtype=np.uint64)
-    np.minimum.at(sig, bins, vals)
-    empty = sig == _MASK
-    if empty.any():
-        if empty.all():
-            return np.zeros(n_bins, dtype=np.uint64)
-        # rotation densification: walk from each empty bin to the next
-        # filled one (wrapping), offset-mixed so borrowed values differ
-        filled_idx = np.nonzero(~empty)[0]
-        # for each bin, the next filled bin at or after it (cyclic)
-        pos = np.searchsorted(filled_idx, np.arange(n_bins))
-        pos[pos == len(filled_idx)] = 0
-        src = filled_idx[pos]
-        borrow = _splitmix64(sig[src] + np.arange(n_bins, dtype=np.uint64))
-        sig = np.where(empty, borrow, sig)
-    return sig
 
 
 def shingle_hashes_batch(
@@ -133,8 +97,10 @@ def oph_signatures_batch(
 ) -> np.ndarray:
     """One-permutation minhash signatures for a whole batch: one scatter
     assigns every shingle to its (doc, bin) minimum, then rotation
-    densification runs vectorized over the (D, n_bins) matrix. Produces
-    exactly :func:`oph_signature` per row."""
+    densification runs vectorized over the (D, n_bins) matrix. Each row
+    is exactly the per-document one-permutation minhash (Li, Owen, Zhang
+    2012) with rotation densification: the oracle and the bit-for-bit
+    pin are in ``tests/test_hashing.py``."""
     bins = (h % np.uint64(n_bins)).astype(np.int64)
     vals = h // np.uint64(n_bins)
     sig = np.full(n_docs * n_bins, _MASK, dtype=np.uint64)
@@ -159,27 +125,6 @@ def oph_signatures_batch(
         if all_empty.any():
             sig[all_empty] = 0
     return sig
-
-
-def make_minhash_udf(n_hashes: int = 128, ngram: int = 5, seed: int = 42):
-    """pandas UDF: text -> array<bigint> minhash signature (length n_hashes)."""
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, 1 << 61, n_hashes, dtype=np.uint64) | np.uint64(1)
-    b = rng.integers(0, 1 << 61, n_hashes, dtype=np.uint64)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            h = np.unique(shingle_hashes(t, ngram))
-            vals = (h[:, None] * a[None, :] + b[None, :]) & _MASK
-            out.append(vals.min(axis=0).astype(np.int64))
-        return pd.Series(out)
-
-    return minhash
 
 
 _FNV_P = np.uint64(1099511628211)

@@ -1,23 +1,17 @@
-"""Pure-python PNG / BMP codecs — REAL image decode without PIL.
+"""Pure-python PNG codec — REAL image decode without PIL.
 
-The container has no PIL/ffmpeg, but PNG and BMP are decodable with
-nothing beyond ``zlib`` + ``struct`` (both stdlib), so the multimodal
-operators' image path can be real for these formats instead of an
-env-gated fake (round-3 VERDICT missing #1 / next-round #9).
+PNG is decodable with nothing beyond ``zlib`` + ``struct`` (both
+stdlib); the q45 driver query decodes images with it inside executors.
 
 Coverage (documented, errors are loud not silent):
   PNG: 8-bit depth, color types 0 (gray), 2 (RGB), 4 (gray+alpha),
        6 (RGBA); all five scanline filters (None/Sub/Up/Average/Paeth);
        non-interlaced only. 16-bit, palette, and Adam7 raise
        ``UnsupportedImageError``.
-  BMP: uncompressed BI_RGB 24/32-bit, bottom-up or top-down rows.
 
-Arrays are (H, W, C) uint8 throughout. ``resize_nearest`` is an exact
-integer nearest-neighbor resampler (deterministic across platforms —
-no float rounding in the index math beyond the standard center rule).
+Arrays are (H, W, C) uint8 throughout.
 
-No reference code involved: PNG per ISO/IEC 15948 (the public spec),
-BMP per the public BITMAPINFOHEADER layout.
+No reference code involved: PNG per ISO/IEC 15948 (the public spec).
 """
 
 from __future__ import annotations
@@ -34,15 +28,6 @@ _CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # PNG color type -> samples/pixel
 
 class UnsupportedImageError(ValueError):
     """Format feature outside this codec's documented coverage."""
-
-
-def sniff_format(data: bytes) -> str | None:
-    """'png' | 'bmp' | None by magic bytes."""
-    if data[:8] == PNG_SIGNATURE:
-        return "png"
-    if data[:2] == b"BM":
-        return "bmp"
-    return None
 
 
 # -------------------------------------------------------------------- PNG
@@ -191,85 +176,3 @@ def encode_png(arr: np.ndarray, filter_type: int = 0) -> bytes:
         + chunk(b"IEND", b"")
     )
 
-
-# -------------------------------------------------------------------- BMP
-
-
-def decode_bmp(data: bytes) -> np.ndarray:
-    """BMP bytes -> (H, W, C) uint8 (C=3 BGR->RGB, C=4 BGRA->RGBA)."""
-    if data[:2] != b"BM":
-        raise UnsupportedImageError("not a BMP")
-    (pix_offset,) = struct.unpack("<I", data[10:14])
-    (hdr_size,) = struct.unpack("<I", data[14:18])
-    if hdr_size < 40:
-        raise UnsupportedImageError(f"BMP header size {hdr_size}")
-    width, height_raw = struct.unpack("<ii", data[18:26])
-    planes, bpp = struct.unpack("<HH", data[26:30])
-    (compression,) = struct.unpack("<I", data[30:34])
-    if compression != 0 or bpp not in (24, 32):
-        raise UnsupportedImageError(
-            f"BMP bpp={bpp} compression={compression} (only BI_RGB 24/32)"
-        )
-    top_down = height_raw < 0
-    height = abs(height_raw)
-    ch = bpp // 8
-    row_bytes = (width * ch + 3) & ~3  # rows pad to 4-byte boundaries
-    out = np.zeros((height, width, ch), dtype=np.uint8)
-    for i in range(height):
-        off = pix_offset + i * row_bytes
-        row = np.frombuffer(data, dtype=np.uint8, count=width * ch, offset=off)
-        y = i if top_down else height - 1 - i
-        out[y] = row.reshape(width, ch)
-    # BGR(A) -> RGB(A)
-    out[:, :, :3] = out[:, :, 2::-1]
-    return out
-
-
-def encode_bmp(arr: np.ndarray) -> bytes:
-    """(H, W, 3) uint8 RGB -> 24-bit BI_RGB BMP bytes (bottom-up)."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = np.repeat(arr[:, :, None], 3, axis=2)
-    if arr.shape[2] == 4:
-        arr = arr[:, :, :3]
-    h, w, _ = arr.shape
-    row_bytes = (w * 3 + 3) & ~3
-    pad = b"\x00" * (row_bytes - w * 3)
-    body = bytearray()
-    for y in range(h - 1, -1, -1):
-        body += arr[y, :, ::-1].tobytes() + pad  # RGB -> BGR
-    pix_offset = 14 + 40
-    file_size = pix_offset + len(body)
-    header = (
-        b"BM"
-        + struct.pack("<IHHI", file_size, 0, 0, pix_offset)
-        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    )
-    return bytes(header) + bytes(body)
-
-
-# ------------------------------------------------------------------ utils
-
-
-def resize_nearest(arr: np.ndarray, new_w: int, new_h: int) -> np.ndarray:
-    """Nearest-neighbor resize, center-rule index map: src = floor((dst +
-    0.5) * size_src / size_dst). Vectorized fancy indexing, deterministic."""
-    h, w = arr.shape[:2]
-    ys = np.minimum(((np.arange(new_h) + 0.5) * h / new_h).astype(np.intp), h - 1)
-    xs = np.minimum(((np.arange(new_w) + 0.5) * w / new_w).astype(np.intp), w - 1)
-    return arr[ys[:, None], xs[None, :]]
-
-
-def gray_histogram(arr: np.ndarray, bins: int = 32) -> np.ndarray:
-    """L1-normalized luminance histogram — the decode-backed feature the
-    multimodal extract uses for formats this codec can actually read.
-    Luma = integer Rec.601 approximation ((77R + 150G + 29B) >> 8)."""
-    a = arr.astype(np.uint32)
-    if a.ndim == 3 and a.shape[2] >= 3:
-        gray = (77 * a[:, :, 0] + 150 * a[:, :, 1] + 29 * a[:, :, 2]) >> 8
-    else:
-        gray = a.reshape(a.shape[0], a.shape[1], -1)[:, :, 0]
-    hist = np.bincount(
-        (gray.ravel() * bins) >> 8, minlength=bins
-    ).astype(np.float32)
-    return hist / max(hist.sum(), 1.0)

@@ -65,12 +65,6 @@ _RC_REV = "TGCAAtgcaaYRMKVBHDyrmkvbhdNnSsWw"
 _DNA_COMP = str.maketrans(_RC_FWD, _RC_REV)
 
 
-def reverse_complement(text: Column) -> Column:
-    """DNA/IUPAC reverse complement — generic translate + reverse, all
-    JVM-side (the reference's RC tables, src/profiles/dna.rs:104-121)."""
-    return F.reverse(F.translate(text, _RC_FWD, _RC_REV))
-
-
 def reverse_complement_str(s: str) -> str:
     return s.translate(_DNA_COMP)[::-1]
 
@@ -82,17 +76,6 @@ def tokens(text: Column) -> Column:
 def token_count(text: Column) -> Column:
     """Whitespace/punctuation token count (the cheap tokenizer)."""
     return F.size(tokens(text))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """A BPE-flavored token estimate: words + digits + punctuation runs,
-    long words counted as ceil(len/4) subword units."""
-    words = F.filter(F.split(text, r"\s+"), lambda t: t != "")
-    return F.aggregate(
-        words,
-        F.lit(0),
-        lambda acc, w: acc + F.ceil(F.length(w) / F.lit(4)).cast("int"),
-    )
 
 
 # ----------------------------------------------------------------- quality
@@ -141,13 +124,6 @@ def quality_score(text: Column) -> Column:
         + F.lit(0.1) * (F.lit(1.0) - F.least(f["digit_ratio"] * 4, F.lit(1.0)))
     )
     return F.least(raw, F.lit(1.0)).cast("double")
-
-
-def junk_char_ratio(text: Column) -> Column:
-    """Fraction of non-printable/replacement chars — the web-text analog of
-    the reference's N-fraction ('--max-n-frac', bin/grep.rs:86-89)."""
-    bad = F.length(F.regexp_replace(text, r"[\x20-\x7E\s]", ""))
-    return (bad / F.greatest(F.length(text), F.lit(1))).cast("double")
 
 
 _EN_STOP = (

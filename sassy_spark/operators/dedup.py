@@ -2,12 +2,12 @@
 pipeline companions to the linkage pipeline.
 
 All operators take a DataFrame with (id, text) (or embeddings) and
-return either per-document verdicts or duplicate pairs/groups. Exact
-dedup is pure Catalyst (hash groupBy); the near-dup family reuses the
-engine's sketch functions (MinHash-LSH, SimHash, winnowing) and the
-n-gram Jaccard verifier. Designed so the expensive verify only sees
-LSH-gated candidates — the same cheap-gate/expensive-verify shape as the
-reference's hierarchical prefilter (src/pattern_tiling/general.rs:60-102).
+return either per-document verdicts or duplicate pairs/groups. The
+near-dup family reuses the engine's sketch functions (MinHash-LSH,
+SimHash, winnowing) and the n-gram Jaccard verifier. Designed so the
+expensive verify only sees LSH-gated candidates — the same
+cheap-gate/expensive-verify shape as the reference's hierarchical
+prefilter (src/pattern_tiling/general.rs:60-102).
 """
 
 from __future__ import annotations
@@ -21,40 +21,6 @@ from ..functions.hashing import (
     make_simhash_udf,
 )
 from ..functions.text import char_ngrams, normalize
-
-
-# ------------------------------------------------------------------- exact
-
-
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical documents: (content_hash, n_dups, doc_ids).
-    One shuffle on the 64-bit content hash; the text column never moves
-    (only the hash does) — at 100 TB this is the difference between a
-    100 TB shuffle and a ~1% one."""
-    h = df.select(
-        F.col(id_col).alias("doc_id"), F.xxhash64(text_col).alias("content_hash")
-    )
-    return (
-        h.groupBy("content_hash")
-        .agg(
-            F.count("*").alias("n_dups"),
-            F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
-        )
-        .where(F.col("n_dups") > 1)
-    )
-
-
-def dedup_exact_keep_first(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep the lowest-id representative of each identical-content group —
-    window top-1 per content hash (no join back, single shuffle)."""
-    w = Window.partitionBy(F.xxhash64(text_col)).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 # ----------------------------------------------------------------- minhash

@@ -1,107 +1,11 @@
-"""Event-stream relational operators (sessionization, funnels, rates) —
-the engine's window-function vocabulary over the events table shape
-(event_id, ts, user_id, event_type, value, props)."""
+"""Event-stream relational operators over the events table shape
+(event_id, ts, user_id, event_type, value, props): the distributed as-of
+join."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_cols: tuple = ("event_id",),
-) -> DataFrame:
-    """Append a per-user ``session_id``: a gap > gap_minutes starts a new
-    session (lag + running sum of break flags — the ordered-window trend
-    scan shape, same as the reference's local-minima walk K5/B8)."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, *order_cols)
-    epoch = F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
-    brk = (
-        F.when(
-            (epoch - F.lag(epoch).over(w)) > gap_minutes * 60_000_000,
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-    )
-    return events.withColumn(
-        "session_id",
-        F.sum(brk).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-
-
-def session_stats(sessions: DataFrame, user_col: str = "user_id") -> DataFrame:
-    """(user, session) -> length/duration rollup."""
-    per = sessions.groupBy(user_col, "session_id").agg(
-        F.count("*").alias("n_events"),
-        F.min("ts").alias("start_ts"),
-        F.max("ts").alias("end_ts"),
-    )
-    return per.groupBy(user_col).agg(
-        F.count("*").alias("n_sessions"),
-        F.avg("n_events").alias("avg_events_per_session"),
-        F.max("n_events").alias("max_events_per_session"),
-    )
-
-
-def funnel(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Ordered-funnel counts: users reaching step i = users whose earliest
-    step-i event follows their earliest step-(i-1) event. Returns
-    (step, step_idx, n_users).
-
-    One aggregation pass for the whole funnel: per-user reached flags are
-    conditional expressions over the pivoted first-timestamps, summed in a
-    single job (the per-step-job + union-of-single-rows form costs N tiny
-    jobs and N scans of the firsts table)."""
-    firsts = (
-        events.where(F.col("event_type").isin(steps))
-        .groupBy(user_col)
-        .pivot("event_type", steps)
-        .agg(F.min(ts_col))
-    )
-    reached = []
-    for i, s in enumerate(steps):
-        if i == 0:
-            cond = F.col(steps[0]).isNotNull()
-        else:
-            cond = reached[i - 1] & F.col(s).isNotNull() & (
-                F.col(s) >= F.col(steps[i - 1])
-            )
-        reached.append(cond)
-    counts = firsts.agg(
-        *[
-            F.sum(r.cast("long")).alias(f"_n{i}")
-            for i, r in enumerate(reached)
-        ]
-    )
-    # one row of N counts -> (step, step_idx, n_users) rows, still
-    # plan-side (posexplode over a literal-keyed array, no driver collect)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("step"),
-                F.coalesce(F.col(f"_n{i}"), F.lit(0)).alias("n_users"),
-            )
-            for i, s in enumerate(steps)
-        ]
-    )
-    return counts.select(
-        F.posexplode(pairs).alias("step_idx", "kv")
-    ).select(
-        F.col("kv.step").alias("step"),
-        F.col("step_idx").cast("int").alias("step_idx"),
-        F.col("kv.n_users").alias("n_users"),
-    )
 
 
 def asof_join(

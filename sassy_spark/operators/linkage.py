@@ -34,6 +34,7 @@ from typing import Callable
 
 import numpy as np
 from py4j.protocol import Py4JError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -42,17 +43,29 @@ from ..kernel import myers
 from .staging import content_state, read_snapshot, write_snapshot
 
 
+def input_file_count(df: DataFrame) -> int:
+    """Number of files behind ``df``, read from plan metadata
+    (inputFiles) — NEVER df.rdd.getNumPartitions(), which converts and
+    executes the plan. 0 for frames no file backs (generators, local
+    data, streams); a plan Spark cannot list also counts as 0, with a
+    warning."""
+    if df.isStreaming:  # Spark refuses inputFiles on a stream
+        return 0
+    try:
+        return len(df.inputFiles())
+    except (Py4JError, CapturedException) as e:
+        logging.getLogger(__name__).warning(
+            "no input file list, treating the frame as not file-backed: %s", e
+        )
+        return 0
+
+
 def _fan_out_small_input(df: DataFrame, key: str) -> DataFrame:
     """Few-file inputs arrive as few partitions and would run Python
-    stages on a handful of cores. File count comes from metadata
-    (inputFiles) — NEVER df.rdd.getNumPartitions(), which converts and
-    executes the plan. Non-file-backed frames (generators, joins) keep
-    their existing partitioning."""
+    stages on a handful of cores. Non-file-backed frames (generators,
+    joins) keep their existing partitioning."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:  # noqa: BLE001
-        return df
+    n_files = input_file_count(df)
     if 0 < n_files < par:
         return df.repartition(par, key)
     return df

@@ -1,5 +1,5 @@
-"""Deterministic corpus curation: hash-based splits/samples and
-skew-safe per-key caps.
+"""Deterministic corpus curation: hash-based splits and skew-safe
+per-key caps.
 
 These are training-data-pipeline operators layered on top of the
 reference's search core (the reference, /root/reference/src/lib.rs, is a
@@ -9,10 +9,10 @@ Catalyst — no UDFs, no collect, no state.
 
 Scale notes (100 TB):
 
-* ``deterministic_split`` / ``hash_sample`` are stateless projections
-  over ``md5`` of the row key — zero shuffle, and the assignment of a
-  row depends ONLY on its key, so it is stable across reruns, cluster
-  sizes, input order, and incremental re-ingestion (the property that
+* ``deterministic_split`` is a stateless projection over ``md5`` of
+  the row key — zero shuffle, and the assignment of a row depends ONLY
+  on its key, so it is stable across reruns, cluster sizes, input
+  order, and incremental re-ingestion (the property that
   makes hash splits the standard train/val/test mechanism for web-scale
   corpora: a re-crawled page never migrates between splits). ``md5`` is
   used instead of ``xxhash64`` deliberately: its hex output is engine-
@@ -98,18 +98,6 @@ def deterministic_split(
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     last = F.lit(cuts[-1][0])
     return df.withColumn(out_col, last if expr is None else expr.otherwise(last))
-
-
-def hash_sample(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    fraction: float = 0.1,
-    salt: str = "",
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows by key hash — the
-    reproducible alternative to ``df.sample`` (same rows every run, on
-    any cluster, in any engine that computes the same md5)."""
-    return df.where(_key_hash(key_col, salt) < F.lit(hex_threshold(fraction)))
 
 
 def cap_per_key(

@@ -18,8 +18,6 @@ Reference parity (RagnarGrootKoerkamp/sassy):
     pattern may hang over text ends at cost floor(alpha * overhang).
   * ``filter_matching``   — the `filter` subcommand (bin/grep.rs:589-622):
     emit records with >= 1 match; --invert = anti join.
-  * ``cost_histogram``    — per-cost match counts (bin/grep.rs:309-328),
-    partial/final agg.
 
 Physical design (Spark-first, NOT a port): the pattern set is small
 (like sassy's -p/-l/-f pattern sources) so it is *broadcast* to every
@@ -31,14 +29,13 @@ the same shape as sassy v2's "one text pass, patterns in SIMD lanes"
 batch vectorization instead of AVX lanes. Case-insensitive search lowers
 the text JVM-side (Catalyst ``lower()`` before the Arrow transfer — also
 shrinks the payload) and the patterns once on the driver. Lanes are
-chunked (SASSY_SEARCH_LANES, default 4096) after length-sorting the
-batch, bounding worker memory at O(lanes x band) regardless of document
+chunked (``SEARCH_LANES`` = 4096) after length-sorting the batch,
+bounding worker memory at O(lanes x band) regardless of document
 length or pattern count.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Callable, Iterator
 
 import numpy as np
@@ -57,7 +54,10 @@ MATCH_SCHEMA = (
 # pattern sources; a million-row patterns_df is a different query shape
 # (use linkage.score_pairs / a join) — fail fast instead of OOMing the
 # driver on collect()
-MAX_PATTERNS = int(os.environ.get("SASSY_MAX_PATTERNS", "100000"))
+MAX_PATTERNS = 100_000
+
+# lanes per kernel call: bounds worker memory at O(lanes x band)
+SEARCH_LANES = 4096
 
 
 def search(
@@ -115,7 +115,7 @@ def search(
             f"search(): > MAX_PATTERNS={MAX_PATTERNS} patterns; "
             "the broadcast-pattern plan is for small pattern sets — for "
             "large ones generate candidate pairs and use "
-            "linkage.score_pairs (or raise SASSY_MAX_PATTERNS)"
+            "linkage.score_pairs"
         )
     pats_local = [(str(r[0]), str(r[1]), "+") for r in pat_rows]
     if rc:
@@ -316,7 +316,6 @@ def _make_runner(
     from ..kernel.profiles import resolve_profile
 
     classes = resolve_profile(profile)
-    max_lanes = int(os.environ.get("SASSY_SEARCH_LANES", "4096"))
     base_mode = "all" if mode == "all_alignments" else mode
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -361,8 +360,8 @@ def _make_runner(
             tb_orig: list = []
             tb_idx: list = []
             # pattern-major lanes over bounded text chunks: worker memory
-            # is O(max_lanes x band words), independent of corpus shape
-            texts_per_chunk = max(1, max_lanes // n_p)
+            # is O(SEARCH_LANES x band words), independent of corpus shape
+            texts_per_chunk = max(1, SEARCH_LANES // n_p)
             for lo in range(0, len(txts), texts_per_chunk):
                 chunk = txts[lo : lo + texts_per_chunk]
                 chunk_orig = origs_all[lo : lo + texts_per_chunk]
@@ -613,21 +612,4 @@ def write_matches_tsv(matches_df: DataFrame, path: str, sorted_output: bool = Tr
         .option("sep", "\t")
         .option("header", True)
         .csv(path)
-    )
-
-
-def cost_histogram(matches_df: DataFrame) -> DataFrame:
-    """Match count per edit cost 0..k — Spark's partial/final hash agg is
-    the distributed analog of the reference's per-thread local histograms
-    merged at the end (bin/grep.rs:515-580)."""
-    return matches_df.groupBy("cost").agg(F.count("*").alias("n_matches")).orderBy("cost")
-
-
-def best_match_per_pair(matches_df: DataFrame) -> DataFrame:
-    """only_best_match as a relational op: min cost, rightmost end
-    tie-break (reference src/search.rs:1403-1410) via min_by on a
-    (cost, -end) sort key struct."""
-    return matches_df.groupBy("pat_id", "text_id").agg(
-        F.min("cost").alias("cost"),
-        F.expr("max_by(end, struct(-cost, end))").alias("end"),
     )

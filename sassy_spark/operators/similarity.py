@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .linkage import input_file_count
+
 
 def cosine_expr(a: Column, b: Column) -> Column:
     """JVM-side cosine similarity of two float arrays (zip_with dot product
@@ -138,15 +140,11 @@ def _reservoir_sample_vectors(
     src = df.select(F.col(vec_col).alias("v"))
     # partition-count estimate from metadata only: .rdd on a plan with
     # exchanges materializes upstream query stages under AQE, i.e. the
-    # exact extra scan the reservoir exists to avoid (same rule as
-    # linkage._fan_out_small_input). File-backed frames use the file
-    # count; everything else the cluster's default parallelism.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:  # noqa: BLE001
-        n_files = 0
-    n_parts = max(1, n_files if n_files > 0 else par)
+    # exact extra scan the reservoir exists to avoid. File-backed frames
+    # use the file count; everything else the cluster's default
+    # parallelism.
+    n_files = input_file_count(df)
+    n_parts = max(1, n_files or df.sparkSession.sparkContext.defaultParallelism)
     quota = max(256, -(-4 * train_sample // n_parts))
 
     def reservoir(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,76 +1,11 @@
-"""Text-analysis operators over a documents table: language ID, quality
-scoring, token counting, fingerprinting. Thin DataFrame wrappers around
-the codegen'd scalar functions in functions/text.py — everything except
-the winnowing fingerprint stays JVM-side."""
+"""Text-analysis operators over a documents table: repetition and
+duplicate-n-gram signals, PII profile, C4 line rules, normalization —
+JVM-side Catalyst except normalization's one Arrow-batched NFC step."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.hashing import make_fingerprint_udf
-from ..functions.text import (
-    bpe_ish_token_count,
-    junk_char_ratio,
-    lang_id,
-    quality_features,
-    quality_score,
-    token_count,
-)
-
-
-def profile_documents(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document text profile: token counts, quality features + score,
-    heuristic language, junk ratio. One scan, all codegen."""
-    t = F.col(text_col)
-    feats = quality_features(t)
-    return docs.select(
-        F.col(id_col),
-        feats["n_chars"].alias("n_chars"),
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_subword_tokens"),
-        feats["alpha_ratio"].alias("alpha_ratio"),
-        feats["digit_ratio"].alias("digit_ratio"),
-        feats["punct_ratio"].alias("punct_ratio"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
-        feats["mean_word_len"].alias("mean_word_len"),
-        quality_score(t).alias("quality"),
-        junk_char_ratio(t).alias("junk_ratio"),
-        lang_id(t).alias("lang_pred"),
-    )
-
-
-def quality_filter(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_quality: float = 0.5,
-    max_junk: float = 0.2,
-    min_tokens: int = 10,
-) -> DataFrame:
-    """The training-data keep/drop gate. ``max_junk`` mirrors the
-    reference's --max-n-frac default 0.2 (bin/grep.rs:86-89): drop
-    records whose junk-char fraction exceeds it."""
-    t = F.col(text_col)
-    return docs.where(
-        (quality_score(t) >= min_quality)
-        & (junk_char_ratio(t) <= max_junk)
-        & (token_count(t) >= min_tokens)
-    )
-
-
-def fingerprint_documents(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 8,
-    window: int = 16,
-) -> DataFrame:
-    fpu = make_fingerprint_udf(ngram=ngram, window=window)
-    return docs.select(
-        F.col(id_col), fpu(F.col(text_col)).alias("fingerprint")
-    )
 
 
 def repetition_signals(

@@ -81,10 +81,7 @@ def build_spark(
         # every fresh page-cache page costs a serialized fault (measured
         # 70x first-touch collapse at 32-way concurrency), so fewer bytes
         # written = directly less time in the kernel
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SASSY_SHUFFLE_CODEC", "zstd"),
-        )
+        .config("spark.io.compression.codec", "zstd")
         # fork workers from a daemon that has numpy/pandas/pyarrow/kernel
         # already imported — pages shared CoW instead of re-faulted per
         # worker (first-touch faults are the scaling bottleneck here)
@@ -110,9 +107,3 @@ def build_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def stop_all() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

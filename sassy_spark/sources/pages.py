@@ -13,9 +13,8 @@ reference evals/src/benchsuite/sim_data.rs:97-120): each cluster of size
 0..k_max random char ins/del/sub. Hosts are drawn zipf-like to create the
 hot-host skew the blocking stage must survive.
 
-Truth side-tables for evaluation:
-  * clusters:      (url, cluster_id)
-  * labeled_pairs: (url_a, url_b, label, edit_distance, block_key)
+Ground truth for evaluation is the ``cluster_id`` column: pages that
+share it are duplicates.
 """
 
 from __future__ import annotations
@@ -23,7 +22,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
@@ -125,50 +123,3 @@ def generate_pages(
             )
 
     return ids.mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def truth_clusters(pages_with_truth: DataFrame) -> DataFrame:
-    return pages_with_truth.select("url", "cluster_id")
-
-
-def labeled_pairs(pages_with_truth: DataFrame, max_negatives_ratio: float = 1.0):
-    """Ground-truth pair labels for the F1 pin.
-
-    Positives: every intra-cluster pair. Negatives: same-host cross-cluster
-    pairs (the hard negatives blocking will surface) — sampled to about
-    ``max_negatives_ratio`` x positives via a per-host window cap.
-    ``edit_distance`` is populated later by the evaluation harness for
-    positives only (exact kernel distance); label is what F1 needs.
-    """
-    p = pages_with_truth.select(
-        "url", "cluster_id", F.expr("parse_url(url, 'HOST')").alias("host")
-    )
-    a, b = p.alias("a"), p.alias("b")
-    pos = (
-        a.join(b, F.col("a.cluster_id") == F.col("b.cluster_id"))
-        .where(F.col("a.url") < F.col("b.url"))
-        .select(
-            F.col("a.url").alias("url_a"),
-            F.col("b.url").alias("url_b"),
-            F.lit(True).alias("label"),
-            F.when(F.col("a.host") == F.col("b.host"), F.col("a.host"))
-            .otherwise(F.lit("minhash"))
-            .alias("block_key"),
-        )
-    )
-    neg = (
-        a.join(b, F.col("a.host") == F.col("b.host"))
-        .where(
-            (F.col("a.url") < F.col("b.url"))
-            & (F.col("a.cluster_id") != F.col("b.cluster_id"))
-        )
-        # deterministic pseudo-random downsample: hash of the pair
-        .where(F.pmod(F.xxhash64("a.url", "b.url"), F.lit(100)) < 5)
-        .select(
-            F.col("a.url").alias("url_a"),
-            F.col("b.url").alias("url_b"),
-            F.lit(False).alias("label"),
-            F.col("a.host").alias("block_key"),
-        )
-    )
-    return pos.unionByName(neg)

@@ -138,8 +138,7 @@ def export_warc(
     Hadoop's FileOutputCommitter v2):
       * a retried or speculatively-executed task re-derives the SAME
         bytes for its partition and renames onto the SAME final name —
-        converging instead of leaving duplicates (the defect of the
-        fixture writer below);
+        converging instead of leaving duplicates;
       * a partially-failed job leaves no ``_SUCCESS``; readers that
         honor the marker see either the whole export or none of it;
       * rename atomicity holds on POSIX/HDFS; on S3-like stores swap the
@@ -202,35 +201,3 @@ def export_warc(
     with open(f"{path}/_SUCCESS", "w") as f:
         _json.dump({"files": files, "records": int(n_records)}, f)
     return {"files": files, "records": int(n_records)}
-
-
-def write_warc(df: DataFrame, path: str, url: str = "url", html: str = "html"):
-    """Write (url, html) rows as WARC files (one file per Arrow batch) —
-    the round-trip FIXTURE writer used by tests.
-
-    NON-TRANSACTIONAL by design: files are written as a side effect
-    inside ``mapInPandas`` with uuid names, so a retried or speculatively
-    executed task leaves duplicate files behind (no task-commit protocol,
-    no cleanup), and output granularity follows Arrow batch boundaries,
-    not partitions. Fine for local test fixtures; production exports go
-    through :func:`export_warc` (deterministic per-partition names +
-    atomic rename + _SUCCESS manifest)."""
-
-    def to_warc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-        import uuid
-
-        for pdf in batches:
-            chunks = [
-                _warc_record(str(u), bytes(h), "2024-01-01T00:00:00Z")
-                for u, h in zip(pdf[url], pdf[html])
-            ]
-            os.makedirs(path, exist_ok=True)
-            name = f"{path}/part-{uuid.uuid4().hex}.warc"
-            with open(name, "wb") as f:
-                f.write(b"".join(chunks))
-            yield pd.DataFrame({"file": [name], "records": [len(pdf)]})
-
-    return df.select(url, html).mapInPandas(
-        to_warc, schema="file string, records long"
-    )

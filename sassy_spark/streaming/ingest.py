@@ -3,10 +3,9 @@
 The reference is batch-only (files in, TSV out); the engine's streaming
 extension covers the pipeline's ingest face: new page snapshots arrive as
 parquet files in a directory (the sandbox stand-in for an Iceberg
-incremental read / Kafka topic), are quality-filtered, fingerprinted, and
-appended to a bronze table — with exactly-once file-sink semantics from
-checkpointing. Windowed event aggregation demonstrates watermark + window
-state for the events table shape.
+incremental read / Kafka topic) and are deduplicated, blocked into
+candidate pairs, enriched as-of, or folded into maintained clusters —
+with exactly-once file-sink semantics from checkpointing.
 """
 
 from __future__ import annotations
@@ -24,52 +23,6 @@ PAGES_STREAM_SCHEMA = T.StructType(
         T.StructField("lang", T.StringType()),
     ]
 )
-
-
-def stream_pages(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    min_chars: int = 32,
-):
-    """File-source stream: filter + derive blocking-side columns + append
-    to parquet with a checkpoint (restart-safe, each input file processed
-    exactly once)."""
-    from ..functions.text import url_host
-
-    src = (
-        spark.readStream.schema(PAGES_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(src_dir)
-    )
-    enriched = (
-        src.where(F.length("text") >= min_chars)
-        .withColumn("host", url_host(F.col("url")))
-        .withColumn("content_hash", F.xxhash64("text"))
-    )
-    return (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
-    """Watermarked sliding-window aggregation over the events shape —
-    late rows beyond 10 minutes dropped deterministically."""
-    # event-time columns must be TIMESTAMP (ltz); parquet NTZ is cast
-    events_stream = events_stream.withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    return (
-        events_stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes"), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-    )
 
 
 def streaming_candidate_pairs(

@@ -16,12 +16,6 @@ def optimized_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def explain_str(df: DataFrame, mode: str = "formatted") -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), mode
-    )
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters section of the scan node (empty string if the
     plan has no file scan)."""
@@ -38,12 +32,6 @@ def assert_broadcast_join(df: DataFrame) -> None:
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, (
         "expected a broadcast join:\n" + plan[:2000]
     )
-
-
-def assert_filter_pushed(df: DataFrame, column: str) -> None:
-    """The named column must appear in a scan's PushedFilters."""
-    pf = pushed_filters(df)
-    assert column in pf, f"filter on {column} not pushed: {pf!r}"
 
 
 def assert_no_python_in_scan_path(df: DataFrame) -> None:

@@ -1,6 +1,5 @@
-"""Pure-python WAV codec + the REAL multimodal audio path it enables
-(round-4: audio decode was an env-gated fake; PCM WAV is now decoded
-for real with struct+numpy, mirroring the round-4 PNG/BMP upgrade)."""
+"""Pure-python PCM WAV codec (struct + numpy) behind the q46 driver
+query."""
 
 from __future__ import annotations
 
@@ -13,7 +12,6 @@ from sassy_spark.functions.audiocodec import (
     UnsupportedAudioError,
     decode_wav,
     encode_wav,
-    rms_envelope,
     sniff_wav,
 )
 
@@ -69,51 +67,3 @@ def test_wav_unsupported_loud():
         decode_wav(bytes(raw))
     with pytest.raises(UnsupportedAudioError):
         encode_wav(np.zeros(10, dtype=np.float32), 8000)
-
-
-def test_rms_envelope_closed_form():
-    """Constant-amplitude alternating signal: RMS of every segment is
-    exactly the amplitude; 8-bit input is centred at 128 first."""
-    amp = 1000
-    sig = np.tile(np.array([amp, -amp], dtype=np.int16), 64)
-    env = rms_envelope(sig, bins=8)
-    assert env.shape == (8,)
-    assert np.allclose(env, amp)
-    sig8 = np.tile(np.array([128 + 50, 128 - 50], dtype=np.uint8), 64)
-    assert np.allclose(rms_envelope(sig8, bins=4), 50.0)
-    assert np.array_equal(rms_envelope(np.empty(0, np.int16), 5), np.zeros(5))
-
-
-def test_multimodal_audio_features_decode_backed(spark):
-    """The audio rows of the synthetic media table carry REAL WAVs; the
-    feature path must produce the decoded-signal RMS envelope (strictly
-    positive for a sine payload) with SASSY_FAKE_DECODE irrelevant, and
-    duration_ms metadata must match the encoded frame count."""
-    from sassy_spark.functions.audiocodec import decode_wav as dw
-    from sassy_spark.operators.multimodal import (
-        extract_features,
-        synthesize_media,
-    )
-
-    media = synthesize_media(spark, 30, seed=11)
-    audio = media.where("kind = 'audio'")
-    rows = audio.collect()
-    assert rows, "fixture must contain audio rows"
-    for r in rows:
-        samples, rate = dw(bytes(r.payload))  # real WAV, decodable
-        assert rate == 8000
-        assert r.duration_ms == round(samples.shape[0] * 1000 / rate)
-    feats = {
-        r.media_id: r.feature
-        for r in extract_features(audio, dim=16).collect()
-    }
-    for r in rows:
-        env = np.array(feats[r.media_id], dtype=np.float32)
-        assert env.shape == (16,)
-        # a 12000-amplitude sine has RMS ~8485 in every segment — far
-        # from both silence and the standard-normal fake feature
-        assert env.min() > 1000.0
-        # pin against the codec directly: recompute from the payload
-        samples, _ = dw(bytes(r.payload))
-        expect = rms_envelope(samples, bins=16)
-        assert np.allclose(env, expect, rtol=1e-5)

@@ -29,19 +29,6 @@ def docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"]).cache()
 
 
-def test_exact_duplicates(docs):
-    groups = dedup.exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert groups[0]["doc_ids"] == [1, 2]
-    assert groups[0]["n_dups"] == 2
-
-
-def test_dedup_keep_first(docs):
-    kept = dedup.dedup_exact_keep_first(docs)
-    ids = {r.doc_id for r in kept.collect()}
-    assert ids == {1, 3, 4, 5, 6}
-
-
 def test_minhash_lsh_finds_near_dups(docs):
     pairs = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.5)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}

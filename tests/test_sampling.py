@@ -57,22 +57,6 @@ def test_deterministic_split_validates_fractions(spark):
         deterministic_split(df, fractions={"a": 0.5, "b": 0.3})
 
 
-def test_hash_sample_reproducible_subset(spark):
-    from sassy_spark.operators.sampling import hash_sample
-
-    df = spark.range(10000).withColumnRenamed("id", "doc_id")
-    s1 = hash_sample(df, fraction=0.2)
-    s2 = hash_sample(df.repartition(7), fraction=0.2)
-    n1 = s1.count()
-    assert abs(n1 / 10000 - 0.2) < 0.02
-    assert s1.exceptAll(s2).count() == 0
-    assert s2.exceptAll(s1).count() == 0
-    # monotone: the 10% sample is a subset of the 20% sample (threshold
-    # semantics), the property that lets a pipeline grow a sample later
-    s_small = hash_sample(df, fraction=0.1)
-    assert s_small.exceptAll(s1).count() == 0
-
-
 def test_cap_per_key_equals_naive_window_on_skewed_keys(spark):
     from sassy_spark.operators.sampling import cap_per_key
 

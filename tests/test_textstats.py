@@ -1,11 +1,19 @@
-"""Text-analysis operators: profile features, quality gate, lang ID,
-multimodal plumbing, html extraction invariant."""
+"""Text-analysis functions and operators: quality features and score,
+lang ID, html extraction invariant, winnowing fingerprint, document
+signals."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from sassy_spark.functions.text import extract_text, lang_id
-from sassy_spark.operators import multimodal, textstats
+from sassy_spark.functions.hashing import make_fingerprint_udf
+from sassy_spark.functions.text import (
+    extract_text,
+    lang_id,
+    quality_features,
+    quality_score,
+    token_count,
+)
+from sassy_spark.operators import textstats
 
 
 def test_profile_features(spark):
@@ -13,7 +21,18 @@ def test_profile_features(spark):
         [(1, "The quick brown fox and the lazy dog."), (2, "12345 67890 !!!")],
         ["doc_id", "text"],
     )
-    p = {r.doc_id: r for r in textstats.profile_documents(docs).collect()}
+    t = F.col("text")
+    feats = quality_features(t)
+    p = {
+        r.doc_id: r
+        for r in docs.select(
+            "doc_id",
+            token_count(t).alias("n_tokens"),
+            feats["stopword_ratio"].alias("stopword_ratio"),
+            feats["digit_ratio"].alias("digit_ratio"),
+            quality_score(t).alias("quality"),
+        ).collect()
+    }
     assert p[1].n_tokens == 8
     assert p[1].stopword_ratio > 0
     assert p[2].digit_ratio > 0.5
@@ -24,7 +43,8 @@ def test_quality_filter_drops_junk(spark):
     good = "the quick brown fox jumps over the lazy dog " * 5
     junk = "\x01\x02\x03\x04" * 30
     docs = spark.createDataFrame([(1, good), (2, junk)], ["doc_id", "text"])
-    kept = textstats.quality_filter(docs)
+    t = F.col("text")
+    kept = docs.where((quality_score(t) >= 0.5) & (token_count(t) >= 10))
     assert [r.doc_id for r in kept.collect()] == [1]
 
 
@@ -52,64 +72,17 @@ def test_html_extraction_byte_identical(pages):
     assert bad == 0
 
 
-def test_multimodal_features_deterministic(spark):
-    media = multimodal.synthesize_media(spark, 30).cache()
-    f1 = multimodal.extract_features(media).collect()
-    f2 = multimodal.extract_features(media).collect()
-    m1 = {r.media_id: list(r.feature) for r in f1}
-    m2 = {r.media_id: list(r.feature) for r in f2}
-    assert m1 == m2
-    assert all(len(v) == 32 for v in m1.values())
-
-
-def test_multimodal_frame_sampling(spark):
-    media = multimodal.synthesize_media(spark, 30)
-    frames = multimodal.sample_frames(media, every_ms=1000, max_frames=4)
-    rows = frames.collect()
-    assert len(rows) > 0
-    per = {}
-    for r in rows:
-        per.setdefault(r.media_id, []).append(r.frame_idx)
-    for mid, idxs in per.items():
-        assert sorted(idxs) == list(range(len(idxs)))
-        assert len(idxs) <= 4
-
-
 def test_fingerprint_documents(spark):
     docs = spark.createDataFrame(
         [(1, "abcdefghij" * 20), (2, "abcdefghij" * 20)], ["doc_id", "text"]
     )
-    fps = {r.doc_id: list(r.fingerprint) for r in textstats.fingerprint_documents(docs).collect()}
+    fpu = make_fingerprint_udf(ngram=8, window=16)
+    fps = {
+        r.doc_id: list(r.fingerprint)
+        for r in docs.select("doc_id", fpu("text").alias("fingerprint")).collect()
+    }
     assert fps[1] == fps[2]
     assert len(fps[1]) > 0
-
-
-def test_resize_images_metadata_and_passthrough(spark):
-    """Multimodal resize: oversized images get scaled metadata + a new
-    payload; small images, audio, and video pass through untouched."""
-    from sassy_spark.operators.multimodal import resize_images, synthesize_media
-
-    media = synthesize_media(spark, 60, seed=9).cache()
-    out = resize_images(media, max_side=256)
-    j = (
-        media.selectExpr(
-            "media_id", "kind", "width as w0", "height as h0",
-            "payload as p0",
-        )
-        .join(out, "media_id")
-        .collect()
-    )
-    assert len(j) == 60
-    for r in j:
-        if r.kind != "image" or r.w0 is None or max(r.w0, r.h0) <= 256:
-            assert r.width == r.w0 and r.height == r.h0
-            assert bytes(r.payload or b"") == bytes(r.p0 or b"")
-        else:
-            assert max(r.width, r.height) <= 256
-            scale = 256 / max(r.w0, r.h0)
-            assert r.width == max(1, round(r.w0 * scale))
-            assert r.height == max(1, round(r.h0 * scale))
-            assert bytes(r.payload) != bytes(r.p0)
 
 
 def test_repetition_signals_closed_form(spark):
